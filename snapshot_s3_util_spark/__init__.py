@@ -14,6 +14,21 @@ CLI; see SURVEY.md §0-§2), re-expressed Spark-first:
 Every operator registers itself in `registry.REGISTRY` with a DuckDB
 oracle SQL string (or None for rows-only checks); `__spark_entry__.py`
 exposes the registry to the driver harness.
+
+Checkpoint policy: a `localCheckpoint` that only truncates lineage for
+several consumers is LAZY (`eager=False`). An eager one runs its own
+driver-blocking materialization job before any real work; a lazy one
+folds into the first consuming action (a loop round's count, a
+broadcast build, the final collect), so a whole input chain
+materializes in one job instead of 2-3 sequential ones — interleaved
+A/B per frame family in OPTIMIZATION_r15.md §7, results identical.
+Racing stages of that job can transiently compute a partition twice;
+every lazily checkpointed frame is deterministic, so the duplicate is
+consistent. Checkpoints stay eager where (a) they must materialize
+before a staging dir they read is removed (temp-dir sinks, scans,
+streaming), (b) they are per-round frontiers feeding a broadcast
+build, where lazy would fold round compute into the broadcast job, or
+(c) a measured lazy A/B lost (the IVF centroids, reason at the site).
 """
 
 from snapshot_s3_util_spark.registry import REGISTRY, register  # noqa: F401

@@ -135,6 +135,13 @@ def spread_compute(df: DataFrame, *keys: str) -> DataFrame:
     and the gate is a no-op, so no shuffle is added where the data is
     already spread. Results are partitioning-independent by
     construction.
+
+    Precondition: `df` must be narrow over its scan (projections and
+    filters, no shuffle). The gate reads `df.rdd`, which plans the
+    query; on a shuffle-bearing frame under AQE that materializes every
+    upstream shuffle stage as a side effect, work the later real action
+    does not reuse. Every current caller passes a projection or filter
+    directly over a scan.
     """
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:

@@ -453,22 +453,6 @@ def llm_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CC_MAX_ROUNDS = 50  # safety bound; the loop exits on convergence
 
-# Input checkpoints (CC candidate pairs / kept shingles / verified
-# edges / simhash fingerprint table) are LAZY (r15, guide §2.4/§5):
-# an eager checkpoint runs a separate driver-blocking materialization
-# job per frame; lazy folds each into the first consuming action (the
-# CC loop's round-1 count, or the op's final collect), so a whole
-# input chain (shingles -> signatures -> candidates [-> verify])
-# materializes in ONE job instead of 2-3 sequential ones. Interleaved
-# A/B (one session, arms alternated, results asserted identical,
-# sf0.1): llm_dedup_components lazy faster 5/7 pairs (med 3.360 ->
-# 3.202 s), llm_dedup_components_verified 6/7 (med 4.362 -> 4.207,
-# min 4.111 -> 3.798); the simhash-pairs pair numbers are in
-# OPTIMIZATION_r15.md. Same determinism note as the graphs module:
-# racing stages may transiently compute a partition twice, but every
-# frame here is deterministic.
-_INPUT_CKPT_EAGER = False
-
 
 def _propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label round as a LAZY plan: (doc_id, old_label, label).
@@ -661,18 +645,16 @@ def llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run the whole minhash pipeline (iterative-graph checkpointing,
     # the GraphX/GraphFrames pattern; pairs = the blocked candidate set,
     # orders of magnitude smaller than the corpus).
-    pairs = llm_dedup_near_minhash(spark, sf_dir).localCheckpoint(
-        eager=_INPUT_CKPT_EAGER
-    )
+    pairs = llm_dedup_near_minhash(spark, sf_dir).localCheckpoint(eager=False)
     return _cc_resolve(pairs)
 
 
 def _cc_resolve(pairs: DataFrame) -> DataFrame:
     """Shared CC tail of the components ops: symmetric edges + initial
     own-label frame -> convergence-driven min-label propagation ->
-    (doc_id, component_id, component_size, is_keeper). `pairs` must
-    already be materialized (checkpointed) — every propagation round
-    references it."""
+    (doc_id, component_id, component_size, is_keeper). `pairs` must be
+    checkpointed (eager or lazy) so rounds do not recompute the
+    upstream pipeline — every propagation round references it."""
     edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
         pairs.selectExpr("doc_b AS src", "doc_a AS dst")
     )
@@ -771,17 +753,13 @@ def llm_dedup_components_verified(
     cost was measured at +0.5-3 s per tier in the r14 cutoff study
     (verify_wall columns, STRESS.md).
     """
-    kept = _minhash_kept(spark, sf_dir).localCheckpoint(
-        eager=_INPUT_CKPT_EAGER
-    )
+    kept = _minhash_kept(spark, sf_dir).localCheckpoint(eager=False)
     # same 4-consumer signature-table materialization as the base op
     # (r14 optimization pass — see llm_dedup_near_minhash)
     minhashes = _minhash_minhashes(kept).localCheckpoint(eager=False)
     cand = _minhash_cand(_minhash_band_sigs(minhashes), minhashes)
     return _cc_resolve(
-        _exact_jaccard_verify(cand, kept).localCheckpoint(
-            eager=_INPUT_CKPT_EAGER
-        )
+        _exact_jaccard_verify(cand, kept).localCheckpoint(eager=False)
     )
 
 
@@ -1077,9 +1055,7 @@ def llm_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline three times (at 100 TB the fingerprint table is the thing
     you persist; pair finding is a cheap self-join over it).
     """
-    fp = llm_dedup_simhash(spark, sf_dir).localCheckpoint(
-        eager=_INPUT_CKPT_EAGER
-    )
+    fp = llm_dedup_simhash(spark, sf_dir).localCheckpoint(eager=False)
     return _simhash_verify(_simhash_cand(_simhash_blk(_simhash_bands(fp))), fp)
 
 
@@ -2130,9 +2106,7 @@ def llm_dedup_cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from snapshot_s3_util_spark.llm.textstats import llm_quality_score
 
-    pairs = llm_dedup_near_minhash(spark, sf_dir).localCheckpoint(
-        eager=_INPUT_CKPT_EAGER
-    )
+    pairs = llm_dedup_near_minhash(spark, sf_dir).localCheckpoint(eager=False)
     edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
         pairs.selectExpr("doc_b AS src", "doc_a AS dst")
     )

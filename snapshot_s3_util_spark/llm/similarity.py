@@ -1434,15 +1434,6 @@ _IVFK_K = 32       # coarse clusters
 _IVFK_ROUNDS = 1   # Lloyd update rounds for the quantizer build
 _IVFK_NPROBE = 12  # clusters probed per query
 
-# Eagerness of the partitioned layout's centroid checkpoint. Lazy was
-# evaluated in the r15 lazy-checkpoint pass and REJECTED by the
-# interleaved A/B (lazy faster in only 2/7 pairs, median 2.405 ->
-# 2.452 s): unlike the pure-compute input frames, folding the Lloyd
-# chain into the partitionBy(cid) WRITE job serializes quantizer
-# compute behind writer setup, and the separate eager job keeps the
-# build/probe split instrument's phase accounting clean.
-_IVF_C1_CKPT_EAGER = True
-
 
 def _ivfk_quantizer_ctes() -> tuple[str, str, str]:
     """DuckDB CTE chain for the learned quantizer, unrolled to
@@ -1777,9 +1768,14 @@ def _ivfk_partitioned_layout(spark: SparkSession, sf_dir: str, out: str):
     # the whole Lloyd chain — two corpus-wide assignment passes per
     # invocation); the final assignment is rebuilt from the
     # checkpointed centroids so the corpus is scored exactly once.
-    # EAGER kept after a measured r15 lazy rejection — see
-    # _IVF_C1_CKPT_EAGER above.
-    c1 = c1.localCheckpoint(eager=_IVF_C1_CKPT_EAGER)
+    # EAGER: lazy was evaluated in the r15 lazy-checkpoint pass and
+    # REJECTED by the interleaved A/B (lazy faster in only 2/7 pairs,
+    # median 2.405 -> 2.452 s): unlike the pure-compute input frames,
+    # folding the Lloyd chain into the partitionBy(cid) WRITE job
+    # serializes quantizer compute behind writer setup, and the
+    # separate eager job keeps the build/probe split instrument's
+    # phase accounting clean.
+    c1 = c1.localCheckpoint(eager=True)
     _assign(v, c1).write.mode("overwrite").partitionBy("cid").parquet(out)
     probe = v.filter(F.col("vec_id") == _PROBE_ID).select(
         F.col("e").alias("pe")

@@ -16,15 +16,6 @@ from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.plans.rank import global_order_stats
 from snapshot_s3_util_spark.registry import register
 
-# Multi-consumer input/rollup checkpoints in this module are LAZY
-# (r15, guide §2.4/§5 — same decision and A/B method as
-# operators/graphs._EDGE_CKPT_EAGER): the first consuming action
-# materializes the frame, so the eager variant's separate blocking
-# job is pure scheduling overhead. Representative A/B pairs recorded
-# in OPTIMIZATION_r15.md; results asserted identical.
-_INPUT_CKPT_EAGER = False
-
-
 
 # Contamination check: docs with doc_id < this bound act as the held-out
 # benchmark/eval set; any other doc sharing word n-grams with them is a
@@ -1271,7 +1262,7 @@ def llm_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("b.w1", "b.w2")
     cb = bi.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_ab")
-    ).localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
     un = (
         cb.select(F.col("w1").alias("w"), F.col("c_ab").alias("c"))
         .unionAll(cb.select(F.col("w2").alias("w"), F.col("c_ab").alias("c")))

@@ -21,15 +21,6 @@ from snapshot_s3_util_spark.plans.rank import (
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
 
-# Multi-consumer input/rollup checkpoints in this module are LAZY
-# (r15, guide §2.4/§5 — same decision and A/B method as
-# operators/graphs._EDGE_CKPT_EAGER): the first consuming action
-# materializes the frame, so the eager variant's separate blocking
-# job is pure scheduling overhead. Representative A/B pairs recorded
-# in OPTIMIZATION_r15.md; results asserted identical.
-_INPUT_CKPT_EAGER = False
-
-
 
 _Q1_ORACLE = f"""
 SELECT
@@ -464,7 +455,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .groupBy("source", "lang")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
 
     def _entropy(df: DataFrame, key_col) -> DataFrame:

@@ -15,15 +15,6 @@ from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
 
-# Multi-consumer input/rollup checkpoints in this module are LAZY
-# (r15, guide §2.4/§5 — same decision and A/B method as
-# operators/graphs._EDGE_CKPT_EAGER): the first consuming action
-# materializes the frame, so the eager variant's separate blocking
-# job is pure scheduling overhead. Representative A/B pairs recorded
-# in OPTIMIZATION_r15.md; results asserted identical.
-_INPUT_CKPT_EAGER = False
-
-
 _Q3_SEGMENT = "BUILDING"
 _Q3_CUTOFF = "1998-01-01 00:00:00"
 
@@ -883,7 +874,7 @@ def ts_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column pruning defeats ReuseExchange — verified on the plan:
     # 2 parquet scans without, 1 with).  The materialized frame is
     # |types| x |days| rows — catalog-sized at any data scale.
-    daily = _up(hourly, "day").localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    daily = _up(hourly, "day").localCheckpoint(eager=False)
     weekly = _up(daily, "week")
 
     def _out(df: DataFrame, grain: str) -> DataFrame:
@@ -1033,7 +1024,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus aggregate runs once (same rationale as
     # ts_rollup_cascade — ReuseExchange doesn't fire across the
     # branch-specialized projections).
-    daily = daily.localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    daily = daily.localCheckpoint(eager=False)
     lags = daily.withColumn(
         "lag", F.explode(F.array(*[F.lit(x) for x in _XCORR_LAGS]))
     )
@@ -1395,9 +1386,7 @@ def ts_forecast_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.to_date(F.date_trunc("day", "ts")).alias("d"),
         F.hour("ts").cast("bigint").alias("h"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n")).localCheckpoint(
-        eager=_INPUT_CKPT_EAGER
-    )
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n")).localCheckpoint(eager=False)
     test_day = F.lit(_SNAIVE_TEST_DAY).cast("date")
     actual = hourly.filter(F.col("d") == test_day).select("event_type", "h", "n")
     forecast = hourly.filter(
@@ -1528,7 +1517,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy(F.to_date(F.date_trunc("day", "ts")).alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     lags = daily.withColumn(
         "lag", F.explode(F.array(*[F.lit(x) for x in _ACF_LAGS]))
@@ -2749,7 +2738,7 @@ def ts_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").over(wk.rowsBetween(Window.unboundedPreceding, 0)).alias(
             "c"
         ),
-    ).localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
     [meta] = idx.agg(
         F.max("k").cast("bigint").alias("len"),
         F.max("c").cast("bigint").alias("tot"),
@@ -3261,7 +3250,7 @@ def ts_granger_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("event_type") == _GRANGER_Y, 1).otherwise(0))
         .cast("bigint")
         .alias("ny"),
-    ).localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
     p = daily.select(
         F.col("d").alias("dp"),
         F.col("ny").alias("w"),

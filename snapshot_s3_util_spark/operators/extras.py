@@ -11,15 +11,6 @@ from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
 
-# Multi-consumer input/rollup checkpoints in this module are LAZY
-# (r15, guide §2.4/§5 — same decision and A/B method as
-# operators/graphs._EDGE_CKPT_EAGER): the first consuming action
-# materializes the frame, so the eager variant's separate blocking
-# job is pure scheduling overhead. Representative A/B pairs recorded
-# in OPTIMIZATION_r15.md; results asserted identical.
-_INPUT_CKPT_EAGER = False
-
-
 
 
 @register(
@@ -955,7 +946,7 @@ def agg_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("u", "user_id")
     mins = h.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= _KMV_K
-    ).localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
     sk = mins.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_minima"), F.max("u").alias("u_k")
     )
@@ -1064,7 +1055,7 @@ def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     basket = e.groupBy("user_id").agg(
         F.expr("array_sort(collect_set(event_type))").alias("items")
-    ).localCheckpoint(eager=_INPUT_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
     n_users_df = basket.agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
     singles = (
         basket.select(F.explode("items").alias("item"))

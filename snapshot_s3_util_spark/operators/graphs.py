@@ -19,25 +19,6 @@ from snapshot_s3_util_spark.registry import register
 _PR_ITERS = 3
 _PR_DAMP = 0.85
 
-# Edge-frame checkpoints are LAZY (r15, guide §2.4/§5 — the CC loop's
-# lazy-checkpoint pattern applied to the graph inputs): an eager
-# checkpoint runs a separate driver-blocking materialization job per
-# frame before any real work — `_strong_und_edges` stacked TWO of them
-# (dir + und) on every undirected-graph op; lazy folds each into the
-# first consuming action (the keyed-frontier count probe, a loop
-# round's count, or the final collect), saving 1-3 sequential job
-# barriers per op with identical plans and results. Interleaved A/B
-# (one session, arms alternated, results asserted identical, sf0.1):
-# pagerank lazy 6/7 pairs (med 1.849 -> 1.675 s), triangle 4/7
-# (1.585 -> 1.531), LPA 6/9 on the deciding re-run (min 1.677 ->
-# 1.606), bfs/kcore a wash inside host noise — no op measured a real
-# loss, and the barrier count drops at any scale. Cost: racing stages
-# of the materializing job can transiently compute a partition twice
-# ("Block already exists" warnings) — bounded by one stage's work,
-# and every frame here is deterministic, so duplicated compute is
-# consistent.
-_EDGE_CKPT_EAGER = False
-
 _EDGES_SQL = """
   SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
          CAST(COUNT(*) AS BIGINT) AS w
@@ -123,7 +104,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w").cast("double")
             / F.sum("w").over(Window.partitionBy("src"))
         ).alias("p"),
-    ).localCheckpoint(eager=_EDGE_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
 
     nodes = nation.select(F.col("n_nationkey").alias("node"))
     n_nodes = nodes.count()
@@ -306,7 +287,7 @@ def _strong_dir_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("wr") <= _STRONG_TOPK)
         )
         .select("src", "dst")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
 
 
@@ -321,7 +302,7 @@ def _strong_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
 
 
@@ -496,33 +477,29 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed unroll in production, traded here for an exact oracle.
 
     r15 (r14 verdict ask #8): past the `_use_keyed_frontier` breakeven
-    the rounds dispatch to `_bfs_round_keyed` (the `_keyed` twin's
-    rounds, output-identical) — see `graph_label_propagation`.
+    the rounds switch to `_bfs_round`'s keyed join (the rounds the
+    `_keyed` twin always runs, output-identical) — see
+    `graph_label_propagation`.
     """
+    return _bfs_hops(spark, sf_dir, keyed=False)
+
+
+def _bfs_hops(spark: SparkSession, sf_dir: str, keyed: bool) -> DataFrame:
+    """Shared body of `graph_bfs_hops` and its `_keyed` twin. `keyed`
+    forces the keyed rounds; `or` short-circuits, so a forced run skips
+    `_use_keyed_frontier`'s count() job."""
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cano = _strong_und_edges(spark, sf_dir)
-    keyed = _use_keyed_frontier(cano)
+    keyed = keyed or _use_keyed_frontier(cano)
     sym = cano.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         cano.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
-    sym = (sym.repartition("u") if keyed else sym).localCheckpoint(
-        eager=_EDGE_CKPT_EAGER
-    )
+    sym = (sym.repartition("u") if keyed else sym).localCheckpoint(eager=False)
     hops = spark.createDataFrame([(_BFS_SRC, 0)], "node int, hops int")
     for _ in range(_BFS_ROUNDS):
-        if keyed:
-            hops = _bfs_round_keyed(sym, hops).localCheckpoint()
-            continue
-        expanded = (
-            sym.join(F.broadcast(hops), sym["u"] == hops["node"])
-            .select(F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
-        )
-        hops = (
-            hops.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint()
-        )
+        hops = _bfs_round(sym, hops, keyed).localCheckpoint()
+    # nation is a true O(|nations|) dimension: broadcasting IT stays
+    # correct at any scale, keyed or not
     return nation.join(
         F.broadcast(hops), nation["n_nationkey"] == hops["node"], "left"
     ).select(
@@ -547,41 +524,27 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpointed edge frame (Catalyst stats are unusable there — a
 # checkpointed LogicalRDD reports the defaultSizeInBytes sentinel,
 # measured 2.6e20 at sf0.1), bounded by the catalog (|E| <= |nations|^2
-# here) and costing one near-empty job. Conf-overridable; <= 0 forces
-# keyed (used by tests to pin the dispatch plan).
+# here) and costing one near-empty job. The `_keyed` twins force the
+# keyed rounds without the probe.
 _KEYED_FRONTIER_MIN_EDGES = 2_000_000
-_KEYED_FRONTIER_MIN_EDGES_CONF = (
-    "spark.snapshot_s3_util.graph.keyedFrontierMinEdges"
-)
 
 
 def _use_keyed_frontier(und: DataFrame) -> bool:
     """True when the graph's canonical edge frame is large enough that
     the per-round |V| frontier must move by keyed shuffle instead of
     broadcast (see the constants block above for the breakeven)."""
-    sess = und.sparkSession
-    try:
-        thr = int(
-            sess.conf.get(
-                _KEYED_FRONTIER_MIN_EDGES_CONF,
-                str(_KEYED_FRONTIER_MIN_EDGES),
-            )
-        )
-    except Exception:
-        thr = _KEYED_FRONTIER_MIN_EDGES
-    if thr <= 0:
-        return True
-    return und.count() >= thr
+    return und.count() >= _KEYED_FRONTIER_MIN_EDGES
 
 
-def _bfs_round_keyed(sym: DataFrame, hops: DataFrame) -> DataFrame:
-    """One BFS frontier expansion with the hops frame joined by KEY
-    (shuffle-hash hint) instead of broadcast. Factored out so
-    tests/test_plans.py can assert the round plan contains no
+def _bfs_round(sym: DataFrame, hops: DataFrame, keyed: bool) -> DataFrame:
+    """One BFS frontier expansion: the hops frame is broadcast, or with
+    `keyed` joined by KEY (shuffle-hash hint). Factored out so
+    tests/test_plans.py can assert the keyed round plan contains no
     broadcast of the |V|-sized frontier."""
-    expanded = sym.join(
-        hops.hint("shuffle_hash"), sym["u"] == hops["node"]
-    ).select(F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
+    side = hops.hint("shuffle_hash") if keyed else F.broadcast(hops)
+    expanded = sym.join(side, sym["u"] == hops["node"]).select(
+        F.col("v").alias("node"), (F.col("hops") + 1).alias("hops")
+    )
     return (
         hops.unionByName(expanded)
         .groupBy("node")
@@ -605,27 +568,7 @@ def graph_bfs_hops_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_BFS_ROUNDS}-round unroll, same oracle: output-identical to the
     base op; STRESS.md records the keyed premium on this small graph.
     """
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    cano = _strong_und_edges(spark, sf_dir)
-    sym = (
-        cano.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionAll(cano.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .repartition("u")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
-    )
-    hops = spark.createDataFrame([(_BFS_SRC, 0)], "node int, hops int")
-    for _ in range(_BFS_ROUNDS):
-        hops = _bfs_round_keyed(sym, hops).localCheckpoint()
-    # nation is a true O(|nations|) dimension; broadcasting IT stays
-    # correct at any scale (see graph_label_propagation_keyed)
-    return nation.join(
-        F.broadcast(hops), nation["n_nationkey"] == hops["node"], "left"
-    ).select(
-        F.col("n_name").alias("nation"),
-        F.coalesce("hops", F.lit(-1)).cast("bigint").alias("hops"),
-    )
+    return _bfs_hops(spark, sf_dir, keyed=True)
 
 
 _ASSORT_ORACLE = f"""
@@ -854,47 +797,32 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds are unrolled, not iterated driver-side.
 
     r15 (r14 verdict ask #8): past the `_use_keyed_frontier` breakeven
-    the rounds dispatch to `_lpa_round_keyed` — the same rounds the
+    the rounds switch to `_lpa_round`'s keyed join — the same rounds the
     `_keyed` twin runs, output-identical (shared oracle), so only the
     join strategy flips once |V| outgrows what a per-round broadcast
     should carry. On this catalog-bounded graph (|E| <= |nations|^2)
     the broadcast branch is always taken; the dispatch exists for the
     deployment where the edge frame is real.
     """
+    return _label_propagation(spark, sf_dir, keyed=False)
+
+
+def _label_propagation(
+    spark: SparkSession, sf_dir: str, keyed: bool
+) -> DataFrame:
+    """Shared body of `graph_label_propagation` and its `_keyed` twin.
+    `keyed` forces the keyed rounds; `or` short-circuits, so a forced
+    run skips `_use_keyed_frontier`'s count() job."""
     und = _strong_und_edges(spark, sf_dir)
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionAll(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
-    if _use_keyed_frontier(und):
-        adj = adj.repartition("nbr").localCheckpoint(
-            eager=_EDGE_CKPT_EAGER
-        )
-        labels = adj.select("node").distinct().withColumn(
-            "label", F.col("node")
-        )
-        for _ in range(_LPA_ROUNDS):
-            labels = _lpa_round_keyed(adj, labels)
-    else:
-        labels = adj.select("node").distinct().withColumn(
-            "label", F.col("node")
-        )
-        for _ in range(_LPA_ROUNDS):
-            nb = labels.select(
-                F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
-            )
-            counts = (
-                adj.join(F.broadcast(nb), "nbr")
-                .groupBy("node", "nbr_label")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            )
-            w = Window.partitionBy("node").orderBy(
-                F.col("c").desc(), F.col("nbr_label").asc()
-            )
-            labels = (
-                counts.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("node", F.col("nbr_label").alias("label"))
-            )
+    keyed = keyed or _use_keyed_frontier(und)
+    if keyed:
+        adj = adj.repartition("nbr").localCheckpoint(eager=False)
+    labels = adj.select("node").distinct().withColumn("label", F.col("node"))
+    for _ in range(_LPA_ROUNDS):
+        labels = _lpa_round(adj, labels, keyed)
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
@@ -902,6 +830,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "community_size",
         F.count(F.lit(1)).over(Window.partitionBy("label")).cast("bigint"),
     )
+    # nation is a true O(|nations|) dimension: broadcasting IT stays
+    # correct at any scale, keyed or not
     return sized.join(
         F.broadcast(nation), sized["node"] == nation["n_nationkey"]
     ).select(
@@ -911,16 +841,16 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_round_keyed(adj: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous LPA round with the label frame joined by KEY
-    (shuffle-hash hint) instead of broadcast — the web-scale frontier
-    recipe. Factored out so tests/test_plans.py can assert the round
-    plan contains no broadcast of the |V| frame."""
+def _lpa_round(adj: DataFrame, labels: DataFrame, keyed: bool) -> DataFrame:
+    """One synchronous LPA round: the label frame is broadcast, or with
+    `keyed` joined by KEY (shuffle-hash hint) — the web-scale frontier
+    recipe. Factored out so tests/test_plans.py can assert the keyed
+    round plan contains no broadcast of the |V| frame."""
     nb = labels.select(
         F.col("node").alias("nbr"), F.col("label").alias("nbr_label")
     )
     counts = (
-        adj.join(nb.hint("shuffle_hash"), "nbr")
+        adj.join(nb.hint("shuffle_hash") if keyed else F.broadcast(nb), "nbr")
         .groupBy("node", "nbr_label")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -956,35 +886,7 @@ def graph_label_propagation_keyed(
     provably output-identical; STRESS.md records the keyed premium
     on these small graphs (the insurance cost) next to the base row.
     """
-    und = _strong_und_edges(spark, sf_dir)
-    adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .unionAll(
-            und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-        )
-        .repartition("nbr")
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
-    )
-    labels = adj.select("node").distinct().withColumn("label", F.col("node"))
-    for _ in range(_LPA_ROUNDS):
-        labels = _lpa_round_keyed(adj, labels)
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    sized = labels.withColumn(
-        "community_size",
-        F.count(F.lit(1)).over(Window.partitionBy("label")).cast("bigint"),
-    )
-    # nation is a true O(|nations|) dimension — broadcasting IT is the
-    # correct plan at any scale; the claim this twin retires is the
-    # per-round |V| label-frame broadcast, not dimension broadcasts
-    return sized.join(
-        F.broadcast(nation), sized["node"] == nation["n_nationkey"]
-    ).select(
-        F.col("n_name").alias("nation"),
-        F.col("label").cast("bigint").alias("community"),
-        "community_size",
-    )
+    return _label_propagation(spark, sf_dir, keyed=True)
 
 
 _KCORE_K = 2
@@ -1157,7 +1059,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cost"
             ),
         )
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     dist = (
         we.sparkSession.range(1)
@@ -1274,7 +1176,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("dst"),
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .localCheckpoint(eager=_EDGE_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     nodes = (
         we.select(F.col("src").alias("node"))

@@ -860,7 +860,9 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cores). Hash-spreading the probe side over the scale-adaptive
     # partition count parallelizes the residual evaluation; the
     # broadcast join is partitioning-agnostic, so results are
-    # unchanged.
+    # unchanged. The build side is pinned to `b`: left to size
+    # estimates, the planner may broadcast the respread `a` instead and
+    # probe with the one-task scan.
     a = p.select(
         F.col("p_partkey").alias("part_a"),
         F.col("p_brand").alias("brand"),
@@ -873,7 +875,7 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         a.join(
-            b,
+            F.broadcast(b),
             (F.col("brand") == F.col("brand_b"))
             & (F.col("part_a") < F.col("part_b")),
         )
@@ -1162,17 +1164,6 @@ _BJ_K = 2          # bloom hash functions (fp = fill^2 ~ 0.3% at sf0.1's fill)
 _BJ_M = 1 << 20    # bloom bits (sized for sf0.1's ~30k keys: ~11% fill)
 _BJ_PRIORITY = "1-URGENT"
 
-# Multi-consumer input checkpoints in this module are LAZY (r15,
-# guide §2.4/§5 — same decision as graphs._EDGE_CKPT_EAGER): the
-# bloom position set's consumers are the K broadcast builds
-# (AQE-deduplicated to one), whose build job materializes it; the
-# set-similarity prefix table's consumers are its two join legs. An
-# eager checkpoint only adds a blocking job before the first action.
-# A/B evidence in OPTIMIZATION_r15.md. (join_partition_pruned_dim's
-# checkpoint stays EAGER — it materializes the returned frame before
-# its staging tempdir is removed.)
-_INPUT_CKPT_EAGER = False
-
 # Kirsch-Mitzenmacher double hashing: ONE md5 per key, positions
 # pos_i = (h1 + i*h2) mod M from its two 32-bit halves — the same
 # idiom as the minhash family; 4x fewer digests on the fact side.
@@ -1252,7 +1243,9 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("h2", F.expr("cast(conv(substring(dg, 9, 8), 16, 10) AS bigint)"))
         .withColumn("i", F.explode(F.array(*[F.lit(i) for i in range(_BJ_K)])))
         .select(((F.col("h1") + F.col("i") * F.col("h2")) % _BJ_M).alias("pos"))
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        # lazy: the position set's consumers are the K broadcast builds
+        # (AQE-deduplicated to one), whose build job materializes it
+        .localCheckpoint(eager=False)
     )
     probe = (
         li.withColumn("dg", F.md5(F.col("l_orderkey").cast("string")))
@@ -1441,7 +1434,8 @@ def join_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("prefix"),
         )
         .repartition(_derive_npart(ordered), "doc_id")
-        .localCheckpoint(eager=_INPUT_CKPT_EAGER)
+        # lazy: the first of the two join legs materializes it
+        .localCheckpoint(eager=False)
     )
     # r15 (guide §2.3/§8 — decide with small rows, attach the payload
     # once): candidate generation and the distinct used to carry BOTH

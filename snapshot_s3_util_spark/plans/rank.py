@@ -28,9 +28,11 @@ The shape:
        window partitioned by `spark_partition_id()` remains (bounded
        frame, no warning) and pays that second exchange.
   3. Global value = local value + the partition's count/sum prefix
-     offset: `groupBy(pid).agg(...)` (npart rows), prefix-summed by a
-     window over those npart rows, broadcast back. Grand totals ride
-     the same npart-row ledger for free.
+     offset: `groupBy(pid).agg(...)` (npart rows) is collected and
+     prefix-summed on the driver, then attached as dense array literals
+     read with `element_at(arr, pid + 1)` — an O(1) lookup per row, and
+     no ledger exchange, window or broadcast join in the plan. Grand
+     totals ride the same npart-row ledger for free.
 
 CORRECTNESS-CRITICAL: the offsets ledger and the rank/cumsum side must
 observe the SAME partition boundaries. RangePartitioner samples its
@@ -51,6 +53,8 @@ pipeline, amortized across every statistic the call computes.
 
 from __future__ import annotations
 
+import json
+from decimal import Decimal
 from typing import Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
@@ -71,50 +75,46 @@ _MID = "_grn_mid"
 #   - est_bytes / _RANK_PART_BYTES keeps each range partition's sort at
 #     ~256 MB of input as the frame grows, so a 100 TB spine gets ~400k
 #     partitions instead of 32 x 3 TB tasks;
-#   - _RANK_MAX_NPART bounds the offsets ledger (npart rows, broadcast)
-#     and the mid-based local index far under its 2**33-row bound.
+#   - _RANK_MAX_NPART bounds the driver-side offsets ledger (npart rows
+#     collected, one array literal entry per pid) and the mid-based
+#     local index far under its 2**33-row bound.
 # The estimate is Catalyst's planning-time sizeInBytes (file-size-based
 # for scans, propagated through projections/filters); frames with no
 # usable estimate (post-checkpoint RDDs report the defaultSizeInBytes
 # sentinel) fall back to the cores floor — exactly the r14 behavior at
-# local[32]. Override per session with the conf key below (documented
-# in OPTIMIZATION_r15.md; the local default keeps the bench comparable).
+# local[32].
 _RANK_PART_BYTES = 256 << 20
 _RANK_MAX_NPART = 65536
-_RANK_PART_BYTES_CONF = "spark.snapshot_s3_util.rank.targetPartitionBytes"
 _STATS_UNKNOWN = 1 << 62  # >= this = missing-stats sentinel, not a size
-
-# r15 (r14 verdict ask #7, boundary-exchange fusion): when the ledger
-# is small, its prefix sums are computed ON THE DRIVER (one collect of
-# npart rows over the already-checkpointed spine) and re-attached as
-# literal maps — removing the ledger's hash exchange, its 1-task window
-# re-exchange AND the BroadcastExchange/join from the plan. Measured on
-# sort_multi (interleaved min-of-7, construction+collect): fused won
-# 7/7 pairs, min 1.98 vs 2.56 s. Above the bound the r14 distributed
-# ledger (window + broadcast join) remains: a create_map literal with
-# 2*npart children is plan bloat at large npart, and the whole point of
-# the distributed form is that it never moves the ledger through the
-# driver. npart rows are bounded by construction, so the collect is
-# O(npart) forever.
-_RANK_FUSE_MAX_NPART = 4096
 
 
 def _derive_npart(df: DataFrame) -> int:
     """Range-partition count for `df`'s spine: max(cores, bytes/target),
     capped. See the constants block above for the derivation."""
-    sess = df.sparkSession
-    cores = sess.sparkContext.defaultParallelism
-    try:
-        target = int(sess.conf.get(_RANK_PART_BYTES_CONF, str(_RANK_PART_BYTES)))
-    except Exception:
-        target = _RANK_PART_BYTES
+    cores = df.sparkSession.sparkContext.defaultParallelism
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         est = 0
     if est <= 0 or est >= _STATS_UNKNOWN:
         return cores
-    return max(cores, min(-(-est // target), _RANK_MAX_NPART))
+    return max(cores, min(-(-est // _RANK_PART_BYTES), _RANK_MAX_NPART))
+
+
+def _pid_lookup(vals: list, vtype: str) -> Column:
+    """`vals[pid]` as a column: ONE array<vtype> literal parsed from a
+    single JSON string, indexed with `element_at(arr, pid + 1)`.
+
+    One string, not one `F.lit` per entry: at the 65536-entry cap the
+    per-entry form spends seconds building Column objects, while
+    `from_json` over a constant folds to a literal array at optimization
+    time. JSON keeps every ledger type exact: ints verbatim, doubles by
+    their round-trip repr (NaN/Infinity as Jackson's non-numeric
+    tokens), decimals by their exact string."""
+    body = ",".join(str(v) if isinstance(v, Decimal) else json.dumps(v) for v in vals)
+    arr = F.from_json(F.lit(f"[{body}]"), f"array<{vtype}>")
+    return F.element_at(arr, F.col(_PID) + 1)
+
 
 # monotonically_increasing_id() = partition_id * 2**33 + row index
 # within the partition, assigned in row iteration order.
@@ -149,11 +149,11 @@ def global_order_stats(
     `keys` must be a total order for `rn`/`cumsum` to be deterministic
     (add a unique tiebreaker as the last key, exactly as you would
     under `ROW_NUMBER() OVER (ORDER BY ...)`). `npart` bounds the
-    per-task frame at ~|rows|/npart; the offsets side stays npart rows
-    and is broadcast regardless. npart=None (the default) derives it
-    from the input-size estimate with a cores floor (`_derive_npart`)
-    — rank/cumsum values are exact for ANY npart, so the choice is
-    pure performance.
+    per-task frame at ~|rows|/npart; the offsets side stays npart rows,
+    collected to the driver and attached as array literals. npart=None
+    (the default) derives it from the input-size estimate with a cores
+    floor (`_derive_npart`) — rank/cumsum values are exact for ANY
+    npart, so the choice is pure performance.
     """
     if npart is None:
         npart = _derive_npart(df)
@@ -199,88 +199,36 @@ def global_order_stats(
             .localCheckpoint(eager=False)
         )
 
-    # npart-row ledger: per-partition row count + per-source sums.
+    # npart-row ledger: per-partition row count + per-source sums,
+    # prefix-summed ON THE DRIVER (one collect of <= _RANK_MAX_NPART
+    # rows over the already-checkpointed spine) and re-attached as dense
+    # array literals — no ledger exchange, window or broadcast join in
+    # the plan. Measured on sort_multi (r15, interleaved min-of-7,
+    # construction+collect): the driver-side ledger won 7/7 pairs over
+    # the distributed window + broadcast-join form, min 1.98 vs 2.56 s.
     srcs = sorted(set(cumsum) | set(totals))
     ledger = part.groupBy(_PID).agg(
         F.count("*").alias("_grn_cnt"),
         *[F.sum(s).alias(f"_grn_sum_{s}") for s in srcs],
     )
-    fuse = npart <= _RANK_FUSE_MAX_NPART
-    if fuse:
-        # Driver-side ledger (see _RANK_FUSE_MAX_NPART above): collect
-        # the npart rows, prefix-sum in Python in pid order — exactly
-        # the window's ROWS UNBOUNDED PRECEDING ... -1 frame, with SQL
-        # SUM's NULL-skipping reproduced by treating a NULL partition
-        # sum as +0 (and an all-NULL source's grand total as NULL).
-        sum_ty = {
-            f.name: f.dataType.simpleString() for f in ledger.schema.fields
-        }
-        lrows = sorted(ledger.collect(), key=lambda r: r[_PID])
-        cnt_prefix: dict = {}
-        acc = 0
-        for r in lrows:
-            cnt_prefix[r[_PID]] = acc
-            acc += r["_grn_cnt"]
-        ntotal_val = acc
-        soff_maps: dict = {}
-        stot_vals: dict = {}
-        for s in srcs:
-            pref: dict = {}
-            sacc = None
-            for r in lrows:
-                pref[r[_PID]] = 0 if sacc is None else sacc
-                v = r[f"_grn_sum_{s}"]
-                if v is not None:
-                    sacc = v if sacc is None else sacc + v
-            soff_maps[s] = pref
-            stot_vals[s] = sacc
+    sum_ty = {f.name: f.dataType.simpleString() for f in ledger.schema.fields}
+    lrows = {r[_PID]: r for r in ledger.collect()}
+    width = max(lrows, default=-1) + 1
 
-        def _lit_map(d: dict, vtype: str) -> Column:
-            items = [
-                x
-                for k, v in sorted(d.items())
-                for x in (F.lit(k), F.lit(v).cast(vtype))
-            ]
-            # empty frame -> empty ledger; any placeholder typechecks,
-            # no row ever evaluates it
-            return (
-                F.create_map(*items)
-                if items
-                else F.create_map(F.lit(0), F.lit(None).cast(vtype))
-            )
-    else:
-        # Distributed ledger (the r14 form): prefix-sum via a window.
-        # Partition by a NON-FOLDABLE constant (`pid % 1` = 0): a
-        # foldable literal is optimized out of the partition spec,
-        # re-triggering the no-partition WindowExec warning this helper
-        # exists to remove. The frame is npart rows.
-        w_prefix = (
-            Window.partitionBy(F.col(_PID) % 1)
-            .orderBy(_PID)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_ledger = Window.partitionBy(F.col(_PID) % 1)
-        off_cols = [F.col(_PID)]
-        if rn is not None or ntotal is not None:
-            off_cols.append(
-                F.coalesce(F.sum("_grn_cnt").over(w_prefix), F.lit(0)).alias(
-                    "_grn_off"
-                )
-            )
-        if ntotal is not None:
-            off_cols.append(F.sum("_grn_cnt").over(w_ledger).alias(ntotal))
-        for s in srcs:
-            if s in cumsum:
-                off_cols.append(
-                    F.coalesce(
-                        F.sum(f"_grn_sum_{s}").over(w_prefix), F.lit(0)
-                    ).alias(f"_grn_soff_{s}")
-                )
-            if s in totals:
-                off_cols.append(
-                    F.sum(f"_grn_sum_{s}").over(w_ledger).alias(totals[s])
-                )
-        offsets = ledger.select(*off_cols)
+    def prefix(col: str):
+        """(offsets, total) of ledger column `col`: offsets[p] = sum over
+        pids < p — exactly the window's ROWS UNBOUNDED PRECEDING .. -1
+        frame, dense over 0..max(pid) so a pid whose range partition
+        came out empty carries the running prefix. SQL SUM's
+        NULL-skipping is reproduced by treating a NULL partition sum as
+        +0; the total is NULL when every partition sum is NULL."""
+        offs, acc = [], None
+        for p in range(width):
+            offs.append(0 if acc is None else acc)
+            v = lrows[p][col] if p in lrows else None
+            if v is not None:
+                acc = v if acc is None else acc + v
+        return offs, acc
 
     out = part
     drop = [_PID]
@@ -303,47 +251,27 @@ def global_order_stats(
         for s in cumsum:
             out = out.withColumn(f"_grn_lcs_{s}", F.sum(s).over(w_run))
             drop.append(f"_grn_lcs_{s}")
-    if fuse:
-        pid_col = F.col(_PID)
-        if rn is not None:
-            out = out.withColumn(
-                rn,
-                (
-                    _lit_map(cnt_prefix, "bigint")[pid_col]
-                    + F.col("_grn_lrn")
-                ).cast("bigint"),
-            )
-        if ntotal is not None:
-            out = out.withColumn(ntotal, F.lit(ntotal_val).cast("bigint"))
-        for s, name in cumsum.items():
-            # coalesce: a partition whose leading rows are NULL would
-            # otherwise poison soff + NULL -> NULL (see NULL handling
-            # above)
-            out = out.withColumn(
-                name,
-                _lit_map(soff_maps[s], sum_ty[f"_grn_sum_{s}"])[pid_col]
-                + F.coalesce(F.col(f"_grn_lcs_{s}"), F.lit(0)),
-            )
-        for s, name in totals.items():
-            out = out.withColumn(
-                name, F.lit(stot_vals[s]).cast(sum_ty[f"_grn_sum_{s}"])
-            )
-        return out.drop(*drop)
-    out = out.join(F.broadcast(offsets), _PID)
+    cnt_offs, cnt_total = prefix("_grn_cnt")
     if rn is not None:
         out = out.withColumn(
-            rn, (F.col("_grn_off") + F.col("_grn_lrn")).cast("bigint")
+            rn,
+            (_pid_lookup(cnt_offs, "bigint") + F.col("_grn_lrn")).cast("bigint"),
         )
-    if rn is not None or ntotal is not None:
-        drop.append("_grn_off")
+    if ntotal is not None:
+        out = out.withColumn(ntotal, F.lit(cnt_total or 0).cast("bigint"))
+    sums = {s: prefix(f"_grn_sum_{s}") for s in srcs}
     for s, name in cumsum.items():
         # coalesce: a partition whose leading rows are NULL would
         # otherwise poison soff + NULL -> NULL (see NULL handling above)
         out = out.withColumn(
             name,
-            F.col(f"_grn_soff_{s}") + F.coalesce(F.col(f"_grn_lcs_{s}"), F.lit(0)),
+            _pid_lookup(sums[s][0], sum_ty[f"_grn_sum_{s}"])
+            + F.coalesce(F.col(f"_grn_lcs_{s}"), F.lit(0)),
         )
-        drop.append(f"_grn_soff_{s}")
+    for s, name in totals.items():
+        out = out.withColumn(
+            name, F.lit(sums[s][1]).cast(sum_ty[f"_grn_sum_{s}"])
+        )
     return out.drop(*drop)
 
 

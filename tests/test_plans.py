@@ -337,10 +337,7 @@ def test_keyed_graph_rounds_have_no_frontier_broadcast(spark):
     asserted plan."""
     from pyspark.sql import functions as F
 
-    from snapshot_s3_util_spark.operators.graphs import (
-        _bfs_round_keyed,
-        _lpa_round_keyed,
-    )
+    from snapshot_s3_util_spark.operators.graphs import _bfs_round, _lpa_round
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "a int, b int"
@@ -356,8 +353,8 @@ def test_keyed_graph_rounds_have_no_frontier_broadcast(spark):
     )
     hops = spark.createDataFrame([(1, 0)], "node int, hops int")
     for df in (
-        _lpa_round_keyed(adj, labels),
-        _bfs_round_keyed(sym, hops),
+        _lpa_round(adj, labels, keyed=True),
+        _bfs_round(sym, hops, keyed=True),
     ):
         plan = physical_plan(df)
         assert "BroadcastHashJoin" not in plan, plan
@@ -684,6 +681,18 @@ def test_fuzzy_join_blocks_on_equi_key(spark, sf_dir):
     df = REGISTRY["join_fuzzy_levenshtein"].fn(spark, sf_dir)
     assert not has_node(df, "BroadcastNestedLoopJoin"), physical_plan(df)
     assert not has_node(df, "CartesianProduct")
+
+
+def test_fuzzy_join_broadcasts_the_unspread_leg(spark, sf_dir):
+    """The build side is pinned to the `part_b` leg, so the respread
+    `part_a` leg stays the probe side that parallelizes the levenshtein
+    residual; broadcasting `a` would reinstate the one-task probe."""
+    import re
+
+    plan = physical_plan(REGISTRY["join_fuzzy_levenshtein"].fn(spark, sf_dir))
+    inputs = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: \[(.*)\]", plan)
+    assert len(inputs) == 1, plan
+    assert "part_b" in inputs[0] and "part_a" not in inputs[0], plan
 
 
 def test_ohlc_bars_single_aggregate_no_window(spark, sf_dir):
@@ -1235,26 +1244,15 @@ def test_analyze_stats_one_scan(spark, sf_dir):
 
 def test_gini_rank_over_user_aggregate(spark, sf_dir):
     """The global rank must consume the |users| aggregate, never raw
-    events. Two valid shapes since the r15 ledger fusion
-    (plans/rank.py `_RANK_FUSE_MAX_NPART`): FUSED — the visible plan's
-    leaf is the checkpointed spine (`Scan ExistingRDD`, already the
-    (user_id, x) aggregate; the events scan + groupBy ran below the
-    checkpoint) and the rank is the map-literal `_grn_mid` projection
-    feeding the moment aggregate; DISTRIBUTED (npart above the fuse
-    cap) — the ledger Window sits above the user HashAggregate as
-    before (root-first: Window above HashAggregate)."""
+    events: the visible plan's leaf is the checkpointed spine (`Scan
+    ExistingRDD`, already the (user_id, x) aggregate; the events scan
+    and groupBy ran below the checkpoint), and the rank offsets ride
+    the spine as array literals — no ledger Window over the rows."""
     df = REGISTRY["agg_gini_coefficient"].fn(spark, sf_dir)
     plan = physical_plan(df)
-    # in BOTH regimes the raw events scan lives below the spine
-    # checkpoint — the rank side must never see a parquet leaf
+    assert "Scan ExistingRDD" in plan, plan
     assert "Scan parquet" not in plan, plan
-    if "Window" in plan:  # distributed-ledger regime
-        win_pos = plan.find("Window")
-        agg_pos = plan.rfind("HashAggregate")
-        assert agg_pos != -1 and win_pos < agg_pos, plan
-    else:  # fused regime: the rank rides the spine projection
-        assert "Scan ExistingRDD" in plan, plan
-        assert "_grn_mid" in plan, plan
+    assert "Window" not in plan, plan
     assert not uses_python(df)
 
 
@@ -1768,28 +1766,21 @@ def test_graph_frontier_dispatch_flips_to_keyed_rounds(spark, sf_dir):
     """r15 (r14 verdict ask #8): the base LPA/BFS ops dispatch their
     per-round join strategy on `_use_keyed_frontier`. Below the edge
     breakeven (every catalog-bounded graph here) the broadcast rounds
-    run — r14-identical plans; forcing the threshold to 0 via conf must
-    route the SAME ops through the keyed rounds and produce identical
-    results, proving the flip changes the join strategy, never the
-    output."""
+    run; the `_keyed` twins force the keyed rounds through the same
+    body and must produce identical results, proving the flip changes
+    the join strategy, never the output."""
     import snapshot_s3_util_spark as engine
     from snapshot_s3_util_spark.operators.graphs import (
-        _KEYED_FRONTIER_MIN_EDGES_CONF,
         _strong_und_edges,
         _use_keyed_frontier,
     )
 
-    und = _strong_und_edges(spark, sf_dir)
-    # default threshold: catalog-bounded |E| stays broadcast
-    assert not _use_keyed_frontier(und)
+    # catalog-bounded |E| stays broadcast
+    assert not _use_keyed_frontier(_strong_und_edges(spark, sf_dir))
 
     for op in ("graph_label_propagation", "graph_bfs_hops"):
-        fn = engine.REGISTRY[op].fn
-        base = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        try:
-            spark.conf.set(_KEYED_FRONTIER_MIN_EDGES_CONF, "0")
-            assert _use_keyed_frontier(und)
-            keyed = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        finally:
-            spark.conf.unset(_KEYED_FRONTIER_MIN_EDGES_CONF)
-        assert base == keyed, op
+        rows = [
+            sorted(map(tuple, engine.REGISTRY[name].fn(spark, sf_dir).collect()))
+            for name in (op, f"{op}_keyed")
+        ]
+        assert rows[0] == rows[1], op

@@ -582,6 +582,63 @@ def test_global_order_stats_null_cumsum_contributes_zero(spark):
     assert out == {1: 0, 2: 0, 3: 10, 4: 10, 5: 15}
 
 
+def test_global_order_stats_exact_past_4096_partitions(spark):
+    """npart above 4096 (up to the 65536 cap) runs the same driver-side
+    ledger as every smaller npart: rn, cumsum and ntotal must stay
+    exact with ~2 distinct keys per range partition, i.e. thousands of
+    pids in the offset arrays and some range partitions empty."""
+    from snapshot_s3_util_spark.plans.rank import global_order_stats
+
+    npart = 4097
+    n = 2 * npart
+    # 7919 is coprime with n, so the keys are a permutation of 0..n-1
+    rows = [(i, (i * 7919) % n, i % 13) for i in range(n)]
+    df = spark.createDataFrame(rows, "uid int, k int, x int")
+    out = global_order_stats(
+        df, ["k"], rn="rn", cumsum={"x": "cx"}, ntotal="n", npart=npart
+    ).collect()
+
+    assert len(out) == n
+    got = {r["uid"]: (r["rn"], r["cx"], r["n"]) for r in out}
+    running = 0
+    for pos, (uid, _, x) in enumerate(sorted(rows, key=lambda r: r[1]), 1):
+        running += x
+        assert got[uid] == (pos, running, n), uid
+
+
+def test_global_order_stats_keeps_sum_types(spark):
+    """The offset arrays and grand totals keep the ledger's SUM type: a
+    decimal source stays an exact decimal, a double source a double
+    (non-finite partition sums included), never a widened or rounded
+    literal."""
+    from decimal import Decimal
+
+    import pytest
+
+    from snapshot_s3_util_spark.plans.rank import global_order_stats
+
+    # the infinite row sits mid-order, so later partitions' offsets are
+    # inf while earlier ones stay finite
+    rows = [
+        (i, Decimal(i) / 100 + Decimal("0.01"), float("inf") if i == 20 else i / 10)
+        for i in range(41)
+    ]
+    df = spark.createDataFrame(rows, "uid int, d decimal(12,2), f double")
+    out = global_order_stats(
+        df, ["uid"], cumsum={"d": "cd", "f": "cf"}, totals={"d": "td"}, npart=7
+    )
+    types = dict(out.dtypes)
+    # SUM(decimal(12,2)) is decimal(22,2); offset + local sum adds a digit
+    assert (types["td"], types["cd"]) == ("decimal(22,2)", "decimal(23,2)"), types
+    assert types["cf"] == "double", types
+    got = {r["uid"]: r for r in out.collect()}
+    run_d, run_f = Decimal(0), 0.0
+    for uid, d, f in rows:
+        run_d, run_f = run_d + d, run_f + f
+        assert got[uid]["cd"] == run_d and got[uid]["td"] == sum(r[1] for r in rows)
+        assert got[uid]["cf"] == pytest.approx(run_f), uid
+
+
 # --- substring-span detector vs naive all-pairs reference -----------
 def _naive_spans(corpus):
     """O(n²) reference for llm_dedup_substring_spans: same k-gram
@@ -958,7 +1015,7 @@ def test_ledger_stream_reader_exactly_once(n_total, stride, n_parts):
         assert batches == -(-n_total // stride)  # ceil: real multi-batch
 
 
-def test_rank_npart_derives_from_input_size(spark, sf_dir):
+def test_rank_npart_derives_from_input_size(spark, sf_dir, monkeypatch):
     """r15 scale-adaptivity (guide §2): with no explicit npart the rank
     spine derives its range-partition count from the planning-time
     input-size estimate — cores floor for small frames (the local
@@ -968,9 +1025,9 @@ def test_rank_npart_derives_from_input_size(spark, sf_dir):
     cores floor. Rank values are exact for ANY npart, so derived and
     pinned spines must agree row-for-row."""
     from snapshot_s3_util_spark.io import load_table
+    from snapshot_s3_util_spark.plans import rank
     from snapshot_s3_util_spark.plans.rank import (
         _RANK_MAX_NPART,
-        _RANK_PART_BYTES_CONF,
         _derive_npart,
         global_row_number,
     )
@@ -984,12 +1041,10 @@ def test_rank_npart_derives_from_input_size(spark, sf_dir):
 
     # shrink the per-partition target so the same estimate demands more
     # partitions than cores: derived must follow est/target, capped
-    try:
-        spark.conf.set(_RANK_PART_BYTES_CONF, "1024")
+    with monkeypatch.context() as m:
+        m.setattr(rank, "_RANK_PART_BYTES", 1024)
         derived = _derive_npart(o)
-        assert cores < derived <= _RANK_MAX_NPART
-    finally:
-        spark.conf.unset(_RANK_PART_BYTES_CONF)
+    assert cores < derived <= _RANK_MAX_NPART
 
     # value-identity: derived npart and the old pinned 32 produce the
     # same exact global row numbers
