@@ -1772,9 +1772,7 @@ def _ivfk_partitioned_layout(spark: SparkSession, sf_dir: str, out: str):
     # REJECTED by the interleaved A/B (lazy faster in only 2/7 pairs,
     # median 2.405 -> 2.452 s): unlike the pure-compute input frames,
     # folding the Lloyd chain into the partitionBy(cid) WRITE job
-    # serializes quantizer compute behind writer setup, and the
-    # separate eager job keeps the build/probe split instrument's
-    # phase accounting clean.
+    # serializes quantizer compute behind writer setup.
     c1 = c1.localCheckpoint(eager=True)
     _assign(v, c1).write.mode("overwrite").partitionBy("cid").parquet(out)
     probe = v.filter(F.col("vec_id") == _PROBE_ID).select(
@@ -1838,57 +1836,3 @@ def llm_sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def ivf_partitioned_split_timings(
-    spark: SparkSession, sf_dir: str, runs: int = 3
-) -> tuple[float, float]:
-    """Build-vs-probe wall split for the bench (r13 verdict ask #4).
-
-    `llm_sim_ann_ivf_partitioned`'s flagship wall deliberately
-    includes the one-time partitioned index WRITE per run — honest,
-    but it overstates per-query cost: a deployment pays the build at
-    quantizer-retrain time and the pruned probe per query. This
-    helper times the two phases separately over the SAME code paths
-    (`_ivfk_partitioned_layout` = quantizer + partitionBy(cid) write
-    + nprobe collect; probe = catalog-pruned read-back -> cosine ->
-    top-{SIM_TOPK} -> collect) and returns the median of `runs`
-    (build_sec, probe_sec). bench.py records the pair in
-    BENCH_DETAIL.json as ivf_partitioned_build_sec /
-    ivf_partitioned_probe_sec next to the combined flagship wall.
-    """
-    import shutil
-    import statistics
-    import tempfile
-    import time
-
-    builds: list[float] = []
-    probes: list[float] = []
-    for _ in range(runs):
-        out = tempfile.mkdtemp(prefix="s3u_spark_ivfpart_")
-        try:
-            t0 = time.perf_counter()
-            _cids, back, probe = _ivfk_partitioned_layout(
-                spark, sf_dir, out
-            )
-            builds.append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            (
-                back.crossJoin(F.broadcast(probe))
-                .withColumn("raw", _cos("e", "pe"))
-                .orderBy(F.col("raw").desc(), F.col("vec_id"))
-                .limit(SIM_TOPK)
-                .select(
-                    "vec_id",
-                    F.col("cid").cast("long").alias("cluster_id"),
-                    F.round("raw", 6).alias("cos_sim"),
-                )
-                .collect()
-            )
-            probes.append(time.perf_counter() - t0)
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-    return (
-        round(statistics.median(builds), 3),
-        round(statistics.median(probes), 3),
-    )

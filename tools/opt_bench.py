@@ -1,7 +1,7 @@
-"""Round-14 optimization lab: isolated per-op timing with min/median.
+"""Per-op lab timer: isolated per-op timing with min/median.
 
-The official bench (bench.py) keeps the driver contract (median of 3,
-shared sweep session). This tool exists because the r14 host shows
+The official benchmark is perfbench/run.py (see BENCHMARK.json); this
+is the one per-op lab timer. It exists because the r14 host shows
 multi-second interference bursts (a 3 s query can read 46-75 s in a
 burst — see OPTIMIZATION_r14.md "Measurement methodology"), so
 before/after comparisons here use MIN of N isolated runs: the min is
@@ -13,7 +13,7 @@ Usage:
 
 --noop times `df.write.format("noop")` instead of `.collect()`
 (guide §1.4) — used when comparing variants whose result-side collect
-cost could mask a compute delta. Official numbers stay `.collect()`.
+cost could mask a compute delta. The default stays `.collect()`.
 """
 
 from __future__ import annotations
@@ -33,10 +33,7 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=5)
     ap.add_argument("--warmups", type=int, default=2)
     ap.add_argument("--noop", action="store_true")
-    ap.add_argument(
-        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR",
-                                       "/root/testdata/sf0.1")
-    )
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
     import snapshot_s3_util_spark as engine

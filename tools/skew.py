@@ -31,8 +31,8 @@ The uniform 30x tier is built by tools/stress.py (or here, on demand,
 with the identical construction); the skewed tier copies it table by
 table with only the key remaps above, so any wall delta is the skew
 and nothing else. Measurement methodology is stress.py's: 2 warm-ups,
-median of 3 noop-sink materializations, shuffle bytes from the UI REST
-snapshot.
+median of 3 noop-sink materializations, shuffle bytes from Spark's
+status store.
 
 Usage:
     python tools/skew.py [--report]   # writes SKEW.md with --report
@@ -316,8 +316,10 @@ def main() -> int:
     uniform_dir = os.path.join(repo, f".stress{_MULT}")
     skew_dir = os.path.join(repo, f".skew{_MULT}")
 
-    spark = stress_tool._get_spark_with_ui()
     import snapshot_s3_util_spark as engine
+    from snapshot_s3_util_spark.session import get_spark
+
+    spark = get_spark("stress")
 
     engine.load_all_operators()
 

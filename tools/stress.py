@@ -34,9 +34,8 @@ sf0.1 (the property that makes growth-factor ~N the pass bar):
   populations with identical per-user session structure, so
   sessionization work grows ~linearly.
 
-Shuffle bytes come from the Spark UI REST API (the stress session runs
-with the UI enabled on a fixed port; the engine's normal sessions keep
-it off), snapshotted around the timed runs.
+Shuffle bytes come from Spark's status store (kept with the UI off),
+read through perfbench's StatusReader over the jobs of the timed runs.
 
 Usage:
     python tools/stress.py [--mult 10] [--base /root/testdata/sf0.1]
@@ -55,7 +54,6 @@ import shutil
 import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -131,38 +129,7 @@ STRESS_OPS = (
 )
 
 _COPY_TABLES = ("customer", "supplier", "nation", "region", "part")
-_UI_PORT = 4055
 _TIMED_RUNS = 3
-
-
-def _get_spark_with_ui():
-    """The engine's canonical conf, plus the UI (REST metrics source).
-
-    Must run before any other get_spark() in this process so
-    getOrCreate() yields THIS session.
-    """
-    from pyspark.sql import SparkSession
-
-    from snapshot_s3_util_spark.session import _RUNTIME_CONFS, ensure_conf
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(_UI_PORT))
-        .config("spark.sql.files.maxPartitionBytes", "256m")
-    )
-    for k, v in _RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return ensure_conf(spark)
 
 
 def build_tier(spark, base: str, out: str, mult: int) -> None:
@@ -267,20 +234,6 @@ def build_tier(spark, base: str, out: str, mult: int) -> None:
         shutil.copy(
             os.path.join(base, f"{t}.parquet"), os.path.join(out, f"{t}.parquet")
         )
-
-
-def _shuffle_snapshot(app_id: str) -> dict[tuple[int, int], int]:
-    """{(stageId, attemptId): shuffleWriteBytes} over completed stages."""
-    url = (
-        f"http://localhost:{_UI_PORT}/api/v1/applications/{app_id}"
-        f"/stages?status=complete"
-    )
-    with urllib.request.urlopen(url, timeout=10) as resp:
-        stages = json.load(resp)
-    return {
-        (s["stageId"], s.get("attemptId", 0)): s.get("shuffleWriteBytes", 0)
-        for s in stages
-    }
 
 
 def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
@@ -1015,23 +968,29 @@ def _materialize(df) -> None:
 def measure(spark, ops, sf_dir: str) -> dict[str, dict]:
     import snapshot_s3_util_spark as engine
 
+    from perfbench.sparkstats import StatusReader
     from snapshot_s3_util_spark.session import clear_persistent_rdds
 
-    app_id = spark.sparkContext.applicationId
+    stats = StatusReader(spark)
     out: dict[str, dict] = {}
     for name in ops:
         clear_persistent_rdds(spark)  # previous op's checkpoint spines
         fn = engine.REGISTRY[name].fn
-        for _ in range(2):  # two warm-ups: Arrow worker-pool ramp (bench.py note)
+        # two warm-ups: the Arrow/mapInPandas Python worker pool is
+        # still ramping up on an op's first two executions
+        for _ in range(2):
             _materialize(fn(spark, sf_dir))
-        before = _shuffle_snapshot(app_id)
+        stats.skip_to_now()
         samples = []
         for _ in range(_TIMED_RUNS):
             t0 = time.perf_counter()
             _materialize(fn(spark, sf_dir))
             samples.append(time.perf_counter() - t0)
-        after = _shuffle_snapshot(app_id)
-        own = {k: v for k, v in after.items() if k not in before}
+        # keyed by stage attempt: a stage listed by two jobs counts once
+        own = {
+            (st["stageId"], st["attemptId"]): st["shuffleWriteBytes"]
+            for job in stats.new_jobs() for st in job["stages"]
+        }
         out[name] = {
             "wall_sec": round(statistics.median(samples), 3),
             "shuffle_write_bytes_per_run": int(sum(own.values()) / _TIMED_RUNS),
@@ -1342,8 +1301,10 @@ def main() -> int:
         )
         return 0
 
-    spark = _get_spark_with_ui()
     import snapshot_s3_util_spark as engine
+    from snapshot_s3_util_spark.session import get_spark
+
+    spark = get_spark("stress")
 
     engine.load_all_operators()
     ops = args.ops or list(STRESS_OPS)
