@@ -22,7 +22,12 @@ from snapshot_s3_util_spark.params import (
     TTL_CUTOFF,
 )
 from snapshot_s3_util_spark.registry import register
-from snapshot_s3_util_spark.sql_helpers import EVENTS_REL, ND_FIELD_SQL, nd_field_col
+from snapshot_s3_util_spark.sql_helpers import (
+    EVENTS_REL,
+    ND_FIELD_SQL,
+    digests_fp_col,
+    nd_field_col,
+)
 
 
 @register(
@@ -120,11 +125,6 @@ def hb_incremental_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Order-insensitive per-group content fingerprint, identical on both
-# engines: md5 of the concatenation of per-row md5s in sorted order.
-_FP_SPARK = lambda rowhash: F.md5(F.concat_ws("", F.sort_array(F.collect_list(rowhash))))  # noqa: E731
-
-
 @register(
     "hb_manifest_verify",
     oracle=f"""
@@ -162,8 +162,14 @@ def hb_manifest_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     true everywhere) so the output is non-empty by construction.
     """
     ev = load_table(spark, sf_dir, "events")
+    # coalesce('') hashes a NULL key like DuckDB CONCAT; Spark's concat
+    # would return NULL and drop the row from the fingerprint
     row_md5 = F.md5(
-        F.concat(F.col("event_id").cast("string"), F.lit("|"), F.col("user_id").cast("string"))
+        F.concat_ws(
+            "|",
+            F.coalesce(F.col("event_id").cast("string"), F.lit("")),
+            F.coalesce(F.col("user_id").cast("string"), F.lit("")),
+        )
     )
     def side(df: DataFrame, prefix: str) -> DataFrame:
         return (
@@ -171,7 +177,7 @@ def hb_manifest_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias(f"{prefix}_count"),
-                _FP_SPARK(F.col("row_md5")).alias(f"{prefix}_fp"),
+                digests_fp_col("row_md5").alias(f"{prefix}_fp"),
             )
         )
     # "dst" re-derives from the same source — an identity export; a real
@@ -246,10 +252,11 @@ def hb_snapshot_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # ND_FIELD mirrors the oracle: NULL cells hash under a sentinel
     # distinct from '', so ''<->NULL corruption changes the fingerprint.
+    # coalesce('') keeps a NULL doc_id in the digest, as DuckDB CONCAT does
     row_md5 = F.md5(
-        F.concat(
-            F.col("doc_id").cast("string"),
-            F.lit("|"),
+        F.concat_ws(
+            "|",
+            F.coalesce(F.col("doc_id").cast("string"), F.lit("")),
             nd_field_col("text"),
         )
     )
@@ -258,7 +265,7 @@ def hb_snapshot_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("row_count"),
-            _FP_SPARK(F.col("row_md5")).alias("content_fp"),
+            digests_fp_col("row_md5").alias("content_fp"),
         )
         .select(
             F.lit("documents").alias("table_name"),

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.registry import register
-from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
+from snapshot_s3_util_spark.sql_helpers import EVENTS_REL, digests_fp_col
 
 # Fixed logical snapshot name (the reference stamps wall-clock time into
 # snapshot names; we pin it for determinism — SURVEY §7).
@@ -118,7 +118,7 @@ def hb_export_import_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("src_n"),
-                F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias("src_fp"),
+                digests_fp_col("h").alias("src_fp"),
             )
         )
         dst_fp = (
@@ -126,7 +126,7 @@ def hb_export_import_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias("content_fp"),
+                digests_fp_col("h").alias("content_fp"),
             )
         )
         return (
@@ -199,9 +199,7 @@ def sink_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("shard")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
-                F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias(
-                    "content_fp"
-                ),
+                digests_fp_col("h").alias("content_fp"),
             )
             .localCheckpoint(eager=True)
         )
@@ -695,9 +693,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.select(row_md5.alias("h"))
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias(
-                    "content_fp"
-                ),
+                digests_fp_col("h").alias("content_fp"),
             )
             .select(
                 F.lit(n_files).cast("bigint").alias("n_files_after"),
@@ -999,8 +995,8 @@ def hb_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_md5 = F.md5(
             F.concat_ws(
                 "|",
-                F.col("user_id").cast("string"),
-                F.col("event_id").cast("string"),
+                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
+                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
             )
         )
         back = None
@@ -1015,9 +1011,7 @@ def hb_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             back = vb if back is None else back.unionByName(vb)
         per_version = back.groupBy("version").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_keys"),
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias(
-                "content_fp"
-            ),
+            digests_fp_col("h").alias("content_fp"),
         )
         return (
             per_version.join(F.broadcast(manifest), "version")
@@ -1085,17 +1079,15 @@ def sink_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_md5 = F.md5(
             F.concat_ws(
                 "|",
-                F.col("event_id").cast("string"),
-                F.col("user_id").cast("string"),
-                F.col("event_type"),
-                F.col("us").cast("string"),
+                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
+                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
+                F.coalesce(F.col("event_type"), F.lit("")),
+                F.coalesce(F.col("us").cast("string"), F.lit("")),
             )
         )
         src_fp = ev.select(row_md5.alias("h")).agg(
             F.count(F.lit(1)).alias("src_rows"),
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias(
-                "src_fp"
-            ),
+            digests_fp_col("h").alias("src_fp"),
         )
         per_fmt = None
         for fmt in _FMT_LIST:
@@ -1112,9 +1104,7 @@ def sink_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             back = r.load(path)
             fp = back.select(row_md5.alias("h")).agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.md5(
-                    F.concat_ws("", F.sort_array(F.collect_list("h")))
-                ).alias("content_fp"),
+                digests_fp_col("h").alias("content_fp"),
             ).select(F.lit(fmt).alias("fmt"), "n_rows", "content_fp")
             per_fmt = fp if per_fmt is None else per_fmt.unionByName(fp)
         return (

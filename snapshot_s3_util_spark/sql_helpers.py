@@ -40,6 +40,32 @@ def keys_fp_col(col: str):
     )
 
 
+def digests_fp_col(col: str):
+    """Order-insensitive content fingerprint over per-row md5 hex digests
+    (an aggregate expression): the Spark twin of the oracles'
+    ``MD5(STRING_AGG(row_md5, '' ORDER BY row_md5))``.
+
+    Each digest is unhexed inside the aggregate's argument, so the
+    partial ``collect_list`` buffer that crosses the shuffle holds 16
+    raw bytes per row instead of a 32-char string. Spark orders
+    ``BinaryType`` by unsigned bytes, the same order as the lowercase
+    hex text, so sorting the bytes and re-hexing them afterwards joins
+    the digests in the oracle's order. NULL digests are skipped, and a
+    group without digests gives ``md5('')``.
+    """
+    from pyspark.sql import functions as F
+
+    return F.md5(
+        F.array_join(
+            F.transform(
+                F.sort_array(F.collect_list(F.unhex(col))),
+                lambda x: F.lower(F.hex(x)),
+            ),
+            "",
+        )
+    )
+
+
 # NULL-distinct field encoding for hash / fingerprint keys
 # (fn_hash salted key, hb_snapshot_manifest row digest).  NULL and ''
 # must produce different digests — a cell corrupted from '' to NULL

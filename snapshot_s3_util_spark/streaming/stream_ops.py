@@ -26,6 +26,7 @@ from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import (
     EVENTS_REL,
     KEYS_FP_SQL,
+    digests_fp_col,
     keys_fp_col,
 )
 
@@ -520,9 +521,7 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                F.md5(F.concat_ws("", F.sort_array(F.collect_list("h")))).alias(
-                    "content_fp"
-                ),
+                digests_fp_col("h").alias("content_fp"),
             )
             .localCheckpoint(eager=True)
         )

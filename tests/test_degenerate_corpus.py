@@ -101,3 +101,18 @@ def _doc_ops():
 @pytest.mark.parametrize("name", _doc_ops())
 def test_doc_op_survives_degenerate_text(name, spark, adv_dir, adv_duck):
     assert_op_matches(REGISTRY[name], spark, adv_dir, adv_duck)
+
+
+def test_snapshot_manifest_keeps_null_doc_id_row(spark, tmp_path):
+    """A NULL doc_id hashes as '' in the manifest fingerprint, as DuckDB
+    CONCAT does, instead of dropping the row from the digest."""
+    adv = build_augmented_dir(
+        str(tmp_path), "documents",
+        "SELECT CAST(NULL AS BIGINT), 'orphan text', 'en', 'src0', "
+        "CAST(11 AS BIGINT)",
+    )
+    con = duck_views(adv)
+    try:
+        assert_op_matches(REGISTRY["hb_snapshot_manifest"], spark, adv, con)
+    finally:
+        con.close()

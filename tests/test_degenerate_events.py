@@ -93,3 +93,38 @@ def adv_duck(adv_dir):
 @pytest.mark.parametrize("name", ops_reading("events"))
 def test_events_op_survives_degenerate_rows(name, spark, adv_dir, adv_duck):
     assert_op_matches(REGISTRY[name], spark, adv_dir, adv_duck)
+
+
+# One event with a NULL user_id. The content fingerprints hash it as
+# DuckDB's CONCAT does (NULL as ''), so the row stays in the digest
+# instead of being dropped (Spark's concat) or losing its separator
+# (concat_ws without coalesce).
+_NULL_USER = """
+SELECT * FROM (VALUES
+  (900030, TIMESTAMP '2024-01-02 20:00:00', CAST(NULL AS BIGINT), 'click',
+   3.0, '{"k": 6}')
+) v(event_id, ts, user_id, event_type, value, props)
+"""
+
+_FINGERPRINT_OPS = (
+    "hb_export_import_cycle",
+    "hb_manifest_verify",
+    "hb_time_travel_read",
+    "sink_format_matrix",
+    "stream_foreach_batch_export",
+)
+
+
+@pytest.fixture(scope="module")
+def null_user_dir(tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("null_user_events"))
+    return build_augmented_dir(out, "events", _NULL_USER)
+
+
+@pytest.mark.parametrize("name", _FINGERPRINT_OPS)
+def test_fingerprint_keeps_null_key_row(name, spark, null_user_dir):
+    con = duck_views(null_user_dir)
+    try:
+        assert_op_matches(REGISTRY[name], spark, null_user_dir, con)
+    finally:
+        con.close()

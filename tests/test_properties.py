@@ -1058,3 +1058,30 @@ def test_rank_npart_derives_from_input_size(spark, sf_dir, monkeypatch):
         for r in global_row_number(o, keys, out="rn", npart=32).collect()
     )
     assert got == want
+
+
+_digest = st.one_of(st.none(), st.binary(min_size=16, max_size=16))
+
+
+@given(digests=st.lists(_digest, max_size=40))
+# first bytes either side of 0x80: unsigned byte order == hex order
+@example(digests=[b"\x80" + b"\x00" * 15, b"\x7f" + b"\xff" * 15,
+                  b"\xff" * 16, b"\x00" * 16, b"\x80" + b"\x01" * 15])
+@example(digests=[None, b"\xa0" * 16, None, b"\x0a" * 16])  # NULLs mixed in
+@example(digests=[None, None, None])                          # all NULL
+@settings(**dict(_SETTINGS, max_examples=20))
+def test_digests_fp_matches_sorted_hex_model(spark, digests):
+    """digests_fp_col over one group equals the oracle's
+    MD5(STRING_AGG(h, '' ORDER BY h)) on lowercase hex digests, NULLs
+    skipped, with partial buffers merged across partitions."""
+    import hashlib
+
+    from snapshot_s3_util_spark.sql_helpers import digests_fp_col
+
+    hexes = [None if d is None else d.hex() for d in digests]
+    df = spark.createDataFrame([(h,) for h in hexes], "h string")
+    got = df.repartition(3).agg(digests_fp_col("h").alias("fp")).first()["fp"]
+    want = hashlib.md5(
+        "".join(sorted(h for h in hexes if h is not None)).encode()
+    ).hexdigest()
+    assert got == want
