@@ -27,6 +27,7 @@ from snapshot_s3_util_spark.sql_helpers import (
     ND_FIELD_SQL,
     digests_fp_col,
     nd_field_col,
+    row_md5_col,
 )
 
 
@@ -162,15 +163,7 @@ def hb_manifest_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     true everywhere) so the output is non-empty by construction.
     """
     ev = load_table(spark, sf_dir, "events")
-    # coalesce('') hashes a NULL key like DuckDB CONCAT; Spark's concat
-    # would return NULL and drop the row from the fingerprint
-    row_md5 = F.md5(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-            F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-        )
-    )
+    row_md5 = row_md5_col("event_id", "user_id")
     def side(df: DataFrame, prefix: str) -> DataFrame:
         return (
             df.select("event_type", row_md5.alias("row_md5"))
@@ -252,14 +245,7 @@ def hb_snapshot_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # ND_FIELD mirrors the oracle: NULL cells hash under a sentinel
     # distinct from '', so ''<->NULL corruption changes the fingerprint.
-    # coalesce('') keeps a NULL doc_id in the digest, as DuckDB CONCAT does
-    row_md5 = F.md5(
-        F.concat_ws(
-            "|",
-            F.coalesce(F.col("doc_id").cast("string"), F.lit("")),
-            nd_field_col("text"),
-        )
-    )
+    row_md5 = row_md5_col("doc_id", nd_field_col("text"))
     return (
         d.select("source", row_md5.alias("row_md5"))
         .groupBy("source")

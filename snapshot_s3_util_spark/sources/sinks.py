@@ -22,7 +22,11 @@ from pyspark.sql import functions as F
 
 from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.registry import register
-from snapshot_s3_util_spark.sql_helpers import EVENTS_REL, digests_fp_col
+from snapshot_s3_util_spark.sql_helpers import (
+    EVENTS_REL,
+    digests_fp_col,
+    row_md5_col,
+)
 
 # Fixed logical snapshot name (the reference stamps wall-clock time into
 # snapshot names; we pin it for determinism — SURVEY §7).
@@ -100,18 +104,10 @@ def hb_export_import_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(out)  # export
         imported = spark.read.parquet(out)  # import
-        # coalesce('') keeps the delimiter structure identical to DuckDB
-        # CONCAT under NULLs (concat_ws silently drops NULL args)
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-                F.coalesce(
-                    F.round(F.col("value") * 1000000).cast("bigint").cast("string"),
-                    F.lit(""),
-                ),
-            )
+        row_md5 = row_md5_col(
+            "event_id",
+            "user_id",
+            F.round(F.col("value") * 1000000).cast("bigint"),
         )
         src_fp = (
             ev.select("event_type", row_md5.alias("h"))
@@ -184,16 +180,7 @@ def sink_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .json(out)
         )
         back = spark.read.schema("doc_id LONG, text STRING, lang STRING, shard INT").json(out)
-        # coalesce('') == DuckDB CONCAT's NULL-as-empty; concat_ws alone
-        # would drop the NULL arg AND its separator
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("doc_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("text"), F.lit("")),
-                F.coalesce(F.col("lang"), F.lit("")),
-            )
-        )
+        row_md5 = row_md5_col("doc_id", "text", "lang")
         return (
             back.select(F.col("shard").cast("bigint").alias("shard"), row_md5.alias("h"))
             .groupBy("shard")
@@ -682,13 +669,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             [f for f in os.listdir(compacted) if f.endswith(".parquet")]
         )
         back = spark.read.parquet(compacted)
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-            )
-        )
+        row_md5 = row_md5_col("event_id", "user_id")
         return (
             back.select(row_md5.alias("h"))
             .agg(
@@ -992,13 +973,7 @@ def hb_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(f"{root}/_manifest")
 
         manifest = spark.read.parquet(f"{root}/_manifest")
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-            )
-        )
+        row_md5 = row_md5_col("user_id", "event_id")
         back = None
         for v in versions:
             vb = (
@@ -1076,15 +1051,7 @@ def sink_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("us"),
         )
         schema = "event_id bigint, user_id bigint, event_type string, us bigint"
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("event_type"), F.lit("")),
-                F.coalesce(F.col("us").cast("string"), F.lit("")),
-            )
-        )
+        row_md5 = row_md5_col("event_id", "user_id", "event_type", "us")
         src_fp = ev.select(row_md5.alias("h")).agg(
             F.count(F.lit(1)).alias("src_rows"),
             digests_fp_col("h").alias("src_fp"),
@@ -1357,8 +1324,10 @@ def sink_compression_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet under snappy / gzip / zstd, each READ BACK and content-
     fingerprinted against the source — codec choice is a first-order
     cost lever at 100 TB (zstd ≈ gzip ratio at ~snappy speed), and
-    this op proves every codec's write→read path is lossless before a
-    fleet standardizes on one.  `roundtrip_ok` asserts the read-back
+    this op proves every codec's write→read path is lossless.  The
+    engine's own exports use zstd (the session default set in
+    `session._RUNTIME_CONFS`); the per-write `compression` option here
+    overrides it.  `roundtrip_ok` asserts the read-back
     fingerprint equals the source fingerprint INSIDE the op; physical
     sizes are environment/implementation detail and deliberately NOT
     part of the comparable contract (they'd differ across library

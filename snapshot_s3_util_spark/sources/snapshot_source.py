@@ -183,8 +183,10 @@ class SnapshotReader(DataSourceReader):
         )
         for path in partition.files:
             table = pq.read_table(path, columns=cols, filters=filters)
-            # Spark writes INT96 timestamps which pyarrow surfaces as
-            # ns; Spark's Arrow bridge only accepts us — truncate.
+            # The engine exports `ts` as INT64 microseconds (UTC), which
+            # pyarrow reads as `timestamp[us, tz=UTC]`. Snapshots exported
+            # before that are INT96, which pyarrow surfaces as ns;
+            # Spark's Arrow bridge only accepts us, so truncate those.
             for i, field in enumerate(table.schema):
                 if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
                     table = table.set_column(

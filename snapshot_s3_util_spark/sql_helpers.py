@@ -40,6 +40,32 @@ def keys_fp_col(col: str):
     )
 
 
+def row_md5_col(*cols):
+    """Per-row md5 hex digest over ``cols`` (names or Columns): the Spark
+    twin of DuckDB's ``MD5(CONCAT(CAST(a AS VARCHAR), '|', ...))``.
+
+    DuckDB's ``CONCAT`` hashes a NULL field as ``''``. Spark's ``concat``
+    would return NULL (dropping the row from a fingerprint) and
+    ``concat_ws`` alone would drop the field and its separator, so each
+    field is cast to string and coalesced to ``''`` first.
+    """
+    from pyspark.sql import Column
+    from pyspark.sql import functions as F
+
+    return F.md5(
+        F.concat_ws(
+            "|",
+            *(
+                F.coalesce(
+                    (c if isinstance(c, Column) else F.col(c)).cast("string"),
+                    F.lit(""),
+                )
+                for c in cols
+            ),
+        )
+    )
+
+
 def digests_fp_col(col: str):
     """Order-insensitive content fingerprint over per-row md5 hex digests
     (an aggregate expression): the Spark twin of the oracles'

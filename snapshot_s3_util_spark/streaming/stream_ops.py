@@ -28,6 +28,7 @@ from snapshot_s3_util_spark.sql_helpers import (
     KEYS_FP_SQL,
     digests_fp_col,
     keys_fp_col,
+    row_md5_col,
 )
 
 _counter = itertools.count()
@@ -507,15 +508,7 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
         back = spark.read.parquet(out)
-        # coalesce('') so a NULL column yields 'a||c' like DuckDB CONCAT,
-        # not concat_ws's separator-dropping 'a|c'
-        row_md5 = F.md5(
-            F.concat_ws(
-                "|",
-                F.coalesce(F.col("event_id").cast("string"), F.lit("")),
-                F.coalesce(F.col("user_id").cast("string"), F.lit("")),
-            )
-        )
+        row_md5 = row_md5_col("event_id", "user_id")
         return (
             back.select("event_type", row_md5.alias("h"))
             .groupBy("event_type")

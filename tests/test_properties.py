@@ -1085,3 +1085,50 @@ def test_digests_fp_matches_sorted_hex_model(spark, digests):
         "".join(sorted(h for h in hexes if h is not None)).encode()
     ).hexdigest()
     assert got == want
+
+
+_row = st.tuples(
+    st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+    st.one_of(st.none(), st.text(max_size=6)),
+    st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+)
+
+
+@given(rows=st.lists(_row, min_size=1, max_size=8))
+@example(rows=[(None, None, None), (1, "", None), (None, "a|b", 2)])
+@settings(**_SETTINGS)
+def test_row_md5_matches_duckdb_concat(spark, rows):
+    """row_md5_col(a, b, c) equals DuckDB's
+    MD5(CONCAT(CAST(a AS VARCHAR), '|', b, '|', CAST(c AS VARCHAR))),
+    NULL fields hashed as '' with their separators kept."""
+    import duckdb
+    import pyarrow as pa
+
+    from snapshot_s3_util_spark.sql_helpers import row_md5_col
+
+    got = [
+        r[0]
+        for r in spark.createDataFrame(
+            [(i, *r) for i, r in enumerate(rows)],
+            "i long, a long, b string, c long",
+        )
+        .orderBy("i")
+        .select(row_md5_col("a", "b", F.col("c")))
+        .collect()
+    ]
+    t = pa.table({
+        "i": list(range(len(rows))),
+        "a": pa.array([r[0] for r in rows], pa.int64()),
+        "b": pa.array([r[1] for r in rows], pa.string()),
+        "c": pa.array([r[2] for r in rows], pa.int64()),
+    })
+    con = duckdb.connect()
+    con.register("t", t)
+    want = [
+        r[0]
+        for r in con.execute(
+            "SELECT MD5(CONCAT(CAST(a AS VARCHAR), '|', b, '|',"
+            " CAST(c AS VARCHAR))) FROM t ORDER BY i"
+        ).fetchall()
+    ]
+    assert got == want
