@@ -1,7 +1,7 @@
 """Custom Python DataSource WRITE path (Spark 4 DataSource API).
 
-`sources/snapshot_source.py` covers the custom READER surface; this
-module covers the writer: a JSONL sink implemented as a
+`sources/stream_source.py` covers the custom streaming READER surface;
+this module covers the writer: a JSONL sink implemented as a
 `DataSourceWriter` — executor-side `write(iterator)` per partition,
 driver-side `commit(messages)` publishing a manifest only after every
 task reported success (the two-phase commit contract object stores
@@ -121,7 +121,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each partition writes independently (no driver data path);
     the manifest is the WAP-style publish point (`sink_manifest_wap`);
     a Python writer trades JVM throughput for arbitrary-format reach —
-    the declared custom-surface cost, same as `source_hbase_snapshot`.
+    the declared custom-surface cost.
     """
     import shutil
     import tempfile

@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 
 from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.registry import register
+from snapshot_s3_util_spark.sources.snapshot_source import (
+    footer_key_range,
+    read_snapshot,
+)
 from snapshot_s3_util_spark.sql_helpers import (
     EVENTS_REL,
     digests_fp_col,
@@ -308,30 +312,20 @@ def hb_restore_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="source",
 )
 def source_hbase_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round trip through the custom snapshot DataSource (A3 -> A4).
+    """Round trip through the snapshot reader (A3 -> A4).
 
-    Exports a snapshot, then reads it back with the registered
-    `hbase_snapshot` Python DataSource with partition pruning (only 2
-    of 5 event_type "regions" are opened) — the oracle checks the
-    pruned read against the source of truth. See
-    sources/snapshot_source.py for the DSv2 design notes.
+    Exports a snapshot, then reads it back with `read_snapshot` under
+    partition pruning: only 2 of 5 event_type "regions" are planned,
+    and their files go to Spark's native Parquet scan. The oracle
+    checks the pruned read against the source of truth. See
+    sources/snapshot_source.py for the planning notes.
     """
-    from snapshot_s3_util_spark.sources.snapshot_source import (
-        register_snapshot_source,
-    )
-
     root = _scratch("snapsrc")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
     try:
         ev = load_table(spark, sf_dir, "events")
         ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        register_snapshot_source(spark)
-        back = (
-            spark.read.format("hbase_snapshot")
-            .option("path", out)
-            .option("partitions", "click,purchase")
-            .load()
-        )
+        back = read_snapshot(spark, out, partitions={"click", "purchase"})
         return (
             back.groupBy("event_type")
             .agg(
@@ -365,7 +359,7 @@ _SNAP_KR_LO, _SNAP_KR_HI = 150, 449
     category="source",
 )
 def source_snapshot_keyrange(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rowkey-range read through the custom snapshot DataSource — the
+    """Rowkey-range read through the snapshot reader — the
     `Scan(startRow, stopRow)` path of the production bridge (SURVEY §4;
     TableSnapshotInputFormat skips regions outside the scan range).
 
@@ -373,15 +367,11 @@ def source_snapshot_keyrange(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned write, so each immutable file carries a tight, disjoint
     key span — the region-boundary analog. Read: `key_range` prunes
     non-overlapping files at PLANNING time from footer stats alone
-    (tests/test_plans.py asserts the split count), and the surviving
-    files push the range into the pyarrow scan as a row-group filter.
-    The oracle checks the pruned read against the source of truth over
-    the full key domain.
+    (tests/test_plans.py asserts the planned-file count), and the range
+    is pushed into the native Parquet scan of the surviving files as a
+    row-group filter. The oracle checks the pruned read against the
+    source of truth over the full key domain.
     """
-    from snapshot_s3_util_spark.sources.snapshot_source import (
-        register_snapshot_source,
-    )
-
     root = _scratch("snapkr")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
     try:
@@ -393,13 +383,7 @@ def source_snapshot_keyrange(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("event_type")
             .parquet(out)
         )
-        register_snapshot_source(spark)
-        back = (
-            spark.read.format("hbase_snapshot")
-            .option("path", out)
-            .option("key_range", f"{_SNAP_KR_LO}:{_SNAP_KR_HI}")
-            .load()
-        )
+        back = read_snapshot(spark, out, key_range=(_SNAP_KR_LO, _SNAP_KR_HI))
         return (
             back.groupBy("event_type")
             .agg(
@@ -512,17 +496,8 @@ def hb_snapshot_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             region = os.path.basename(d).split("=", 1)[1]
             for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
                 md = _pq.read_metadata(f)
-                names = md.schema.names
-                kmin = kmax = None
-                if "event_id" in names:
-                    ci = names.index("event_id")
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            kmin = kmax = None
-                            break
-                        kmin = st.min if kmin is None else min(kmin, st.min)
-                        kmax = st.max if kmax is None else max(kmax, st.max)
+                # an unbounded footer is recorded as NULL bounds
+                kmin, kmax = footer_key_range(md) or (None, None)
                 entries.append(
                     {
                         "region": region,

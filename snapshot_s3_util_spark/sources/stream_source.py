@@ -1,10 +1,8 @@
 """Python DataSource streaming READER (Spark 4, SPARK-45023 Python
 data source API, streaming half).
 
-The engine already exercises the batch reader (sources/
-snapshot_source.py, planning-time pruning) and the batch writer
-(sources/python_sink.py); this module completes the matrix with a
-custom STREAMING source: a deterministic "ledger" feed whose offsets
+The engine exercises the batch writer (sources/python_sink.py); this
+module adds the reader side with a custom STREAMING source: a deterministic "ledger" feed whose offsets
 are plain row positions. The exactly-once contract is the thing under
 test — Spark drives `initialOffset` → `latestOffset` → `partitions
 (start, end)` → per-partition `read`, checkpoints the offset json, and

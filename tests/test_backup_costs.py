@@ -22,9 +22,7 @@ from perfbench.sparkstats import StatusReader
 from snapshot_s3_util_spark import REGISTRY
 from snapshot_s3_util_spark.io import load_table
 from snapshot_s3_util_spark.session import ensure_conf
-from snapshot_s3_util_spark.sources.snapshot_source import (
-    register_snapshot_source,
-)
+from snapshot_s3_util_spark.sources.snapshot_source import read_snapshot
 from snapshot_s3_util_spark.sql_helpers import digests_fp_col
 
 _CODEC = "spark.sql.parquet.compression.codec"
@@ -152,15 +150,26 @@ def _rows(df, cols):
     return sorted((tuple(r) for r in df.select(*cols).collect()), key=repr)
 
 
-@pytest.mark.parametrize("legacy", [True, False], ids=["int96", "micros"])
+@pytest.mark.parametrize(
+    "legacy, null_row",
+    [(True, False), (False, False), (False, True)],
+    ids=["int96", "micros", "null_row"],
+)
 def test_snapshot_source_reads_both_export_formats(
-    legacy, spark, sf_dir, tmp_path
+    legacy, null_row, spark, sf_dir, tmp_path
 ):
-    """The `hbase_snapshot` source reads every column of an `events`
-    export exactly as `spark.read.parquet` and the source table do,
-    for snapshots exported in Spark's legacy format and in the
-    engine's."""
+    """`read_snapshot` reads every column of an `events` export exactly
+    as `spark.read.parquet` and the source table do, for snapshots
+    exported in Spark's legacy format and in the engine's. A row with
+    a NULL `event_type` lands in the hive NULL directory and reads
+    back as SQL NULL."""
     ev = load_table(spark, sf_dir, "events")
+    if null_row:
+        ev = ev.unionByName(
+            ev.orderBy("event_id").limit(1).withColumn(
+                "event_type", F.lit(None).cast("string")
+            )
+        )
     out = str(tmp_path / "snap")
     ctx = _legacy_export_format(spark) if legacy else contextlib.nullcontext()
     with ctx:
@@ -172,10 +181,14 @@ def test_snapshot_source_reads_both_export_formats(
         pa.timestamp("ns") if legacy else pa.timestamp("us", tz="UTC")
     )
 
-    register_snapshot_source(spark)
-    snap = spark.read.format("hbase_snapshot").option("path", out).load()
+    snap = read_snapshot(spark, out)
     cols = snap.columns
     assert sorted(cols) == sorted(ev.columns)
     got = _rows(snap, cols)
     assert got == _rows(spark.read.parquet(out), cols)
     assert got == _rows(ev, cols)
+    if null_row:
+        assert os.path.isdir(
+            os.path.join(out, "event_type=__HIVE_DEFAULT_PARTITION__")
+        )
+        assert snap.filter(F.col("event_type").isNull()).count() == 1

@@ -1598,60 +1598,46 @@ def test_unicode_normalize_arrow_and_pruned(spark, sf_dir):
 
 
 def test_snapshot_keyrange_prunes_splits_at_planning_time(spark, sf_dir, tmp_path):
-    """The DSv2 snapshot source's `key_range` must drop non-overlapping
+    """The snapshot reader's `key_range` must drop non-overlapping
     files BEFORE any data I/O (SURVEY §4 production-bridge row): with
     the export range-partitioned on event_id into 8 key spans, a
     300-key scan range can overlap at most a couple of spans, so the
     planner must open strictly fewer files than the full snapshot —
-    decided from footer stats alone."""
+    decided from footer stats alone. A NULL rowkey rides along in the
+    export and is excluded by the range, as `Scan(start, stop)` does."""
     from pyspark.sql import functions as F
 
     from snapshot_s3_util_spark.io import load_table
-    from snapshot_s3_util_spark.sources.snapshot_source import SnapshotReader
+    from snapshot_s3_util_spark.sources.snapshot_source import (
+        plan_snapshot_files,
+        read_snapshot,
+    )
 
+    ev = load_table(spark, sf_dir, "events")
+    null_key = ev.orderBy("event_id").limit(1).withColumn(
+        "event_id", F.lit(None).cast("bigint")
+    )
     out = str(tmp_path / "snap")
     (
-        load_table(spark, sf_dir, "events")
+        ev.unionByName(null_key)
         .repartitionByRange(8, "event_id")
         .sortWithinPartitions("event_id")
         .write.mode("overwrite")
         .partitionBy("event_type")
         .parquet(out)
     )
-    schema = spark.createDataFrame(
-        [], "event_id bigint, ts timestamp, user_id bigint, "
-        "value double, props string, event_type string"
-    ).schema
 
-    def n_files(opts):
-        return sum(
-            len(p.files) for p in SnapshotReader(schema, opts).partitions()
-        )
-
-    total = n_files({"path": out})
-    pruned = n_files({"path": out, "key_range": "150:449"})
+    total = len(plan_snapshot_files(out))
+    pruned = len(plan_snapshot_files(out, key_range=(150, 449)))
     assert total >= 8, total  # 8 key spans exist (x partition dirs)
     assert 0 < pruned < total / 2, (pruned, total)
 
-    # and the pruned read returns exactly the in-range rows
-    from snapshot_s3_util_spark.sources.snapshot_source import (
-        register_snapshot_source,
-    )
-
-    register_snapshot_source(spark)
-    got = (
-        spark.read.format("hbase_snapshot")
-        .option("path", out)
-        .option("key_range", "150:449")
-        .load()
-        .count()
-    )
-    want = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id").between(150, 449))
-        .count()
-    )
+    # the pruned read returns exactly the in-range rows, the NULL key
+    # excluded; the unranged read keeps it
+    got = read_snapshot(spark, out, key_range=(150, 449)).count()
+    want = ev.filter(F.col("event_id").between(150, 449)).count()
     assert got == want, (got, want)
+    assert read_snapshot(spark, out).count() == ev.count() + 1
 
 
 def test_snapshot_keyrange_planned_splits_flat_as_regions_grow(
@@ -1665,14 +1651,12 @@ def test_snapshot_keyrange_planned_splits_flat_as_regions_grow(
     through 4,000 total; this pins the invariant in CI at two span
     counts."""
     from snapshot_s3_util_spark.io import load_table
-    from snapshot_s3_util_spark.sources.snapshot_source import SnapshotReader
+    from snapshot_s3_util_spark.sources.snapshot_source import (
+        plan_snapshot_files,
+    )
 
     from pyspark.sql import functions as F
 
-    schema = spark.createDataFrame(
-        [], "event_id bigint, ts timestamp, user_id bigint, "
-        "value double, props string, event_type string"
-    ).schema
     ev = load_table(spark, sf_dir, "events")
     # a ~5% slice of the key DOMAIN (the stress tool's 150:449 is 5%
     # of sf0.1's domain; at the tiny test SF that literal range would
@@ -1693,15 +1677,9 @@ def test_snapshot_keyrange_planned_splits_flat_as_regions_grow(
             .partitionBy("event_type")
             .parquet(out)
         )
-
-        def n_files(opts):
-            return sum(
-                len(p.files) for p in SnapshotReader(schema, opts).partitions()
-            )
-
         counts[spans] = (
-            n_files({"path": out, "key_range": f"{lo}:{hi}"}),
-            n_files({"path": out}),
+            len(plan_snapshot_files(out, key_range=(lo, hi))),
+            len(plan_snapshot_files(out)),
         )
     (p8, t8), (p32, t32) = counts[8], counts[32]
     assert t32 >= 3 * t8, counts  # total files really grew with spans
@@ -1713,19 +1691,50 @@ def test_snapshot_keyrange_planned_splits_flat_as_regions_grow(
     assert p32 / t32 < p8 / t8, counts  # planned fraction shrank
 
 
+def test_snapshot_read_splits_one_partition_across_cores(spark, sf_dir, tmp_path):
+    """One partition directory is scanned by as many splits as the
+    session has cores, not by one task: with the export
+    range-partitioned into 8 key spans per event_type, reading only
+    `click` plans at least `defaultParallelism` scan splits. Building
+    the full read of those 40 files starts no Spark job (Spark lists
+    more than 32 explicit paths with a job of one task per path)."""
+    from perfbench.sparkstats import StatusReader
+    from snapshot_s3_util_spark.io import load_table
+    from snapshot_s3_util_spark.sources.snapshot_source import (
+        plan_snapshot_files,
+        read_snapshot,
+    )
+
+    out = str(tmp_path / "snap")
+    (
+        load_table(spark, sf_dir, "events")
+        .repartitionByRange(8, "event_id")
+        .write.mode("overwrite")
+        .partitionBy("event_type")
+        .parquet(out)
+    )
+    snap = read_snapshot(spark, out, partitions={"click"})
+    n_splits = snap.rdd.getNumPartitions()
+    assert n_splits >= spark.sparkContext.defaultParallelism, n_splits
+
+    assert len(plan_snapshot_files(out)) > 32
+    stats = StatusReader(spark)
+    read_snapshot(spark, out)
+    assert stats.new_jobs() == []
+
+
 def test_snapshot_source_column_projection_never_decodes_unselected(
     spark, sf_dir, tmp_path
 ):
-    """The `columns` option is the CF-projection analog: the narrowed
-    schema reaches the pyarrow read as its column list, so unselected
-    columns are never decoded (not merely dropped post-scan), and the
-    partition column is materialized only when requested."""
+    """A `.select()` on a snapshot read is the CF-projection analog:
+    the native scan's ReadSchema narrows to the selected columns, so
+    unselected ones are never decoded (not merely dropped post-scan),
+    and an unknown column fails analysis."""
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from snapshot_s3_util_spark.io import load_table
-    from snapshot_s3_util_spark.sources.snapshot_source import (
-        register_snapshot_source,
-    )
+    from snapshot_s3_util_spark.sources.snapshot_source import read_snapshot
 
     out = str(tmp_path / "snap")
     (
@@ -1734,14 +1743,11 @@ def test_snapshot_source_column_projection_never_decodes_unselected(
         .partitionBy("event_type")
         .parquet(out)
     )
-    register_snapshot_source(spark)
-    narrow = (
-        spark.read.format("hbase_snapshot")
-        .option("path", out)
-        .option("columns", "event_id,user_id")
-        .load()
-    )
+    narrow = read_snapshot(spark, out).select("event_id", "user_id")
     assert narrow.columns == ["event_id", "user_id"]
+    rs = read_schema(narrow)
+    assert rs.count("ReadSchema") == 1, rs
+    assert "ReadSchema: struct<event_id:bigint,user_id:bigint>" in rs, rs
     want = load_table(spark, sf_dir, "events").count()
     assert narrow.count() == want
     got_sum = narrow.agg(F.sum("user_id")).collect()[0][0]
@@ -1750,16 +1756,8 @@ def test_snapshot_source_column_projection_never_decodes_unselected(
     )
     assert got_sum == want_sum
 
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="unknown snapshot columns"):
-        (
-            spark.read.format("hbase_snapshot")
-            .option("path", out)
-            .option("columns", "event_id,nope")
-            .load()
-            .collect()
-        )
+    with pytest.raises(AnalysisException):
+        read_snapshot(spark, out).select("event_id", "nope").collect()
 
 
 def test_graph_frontier_dispatch_flips_to_keyed_rounds(spark, sf_dir):

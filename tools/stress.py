@@ -237,8 +237,8 @@ def build_tier(spark, base: str, out: str, mult: int) -> None:
 
 
 def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
-    """Planning-time split pruning of the DSv2 snapshot source at a
-    stress tier (r10 verdict ask #6).
+    """Planning-time file pruning and scan parallelism of
+    `read_snapshot` at a stress tier.
 
     Layout discipline: span count scales WITH the tier (8 * mult range
     partitions on event_id) — the region analog, where region SIZE is
@@ -247,13 +247,15 @@ def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
     proof of "pruning holds at 100x" is planned-file count staying
     flat while total files grow ~mult (planned fraction -> 0), decided
     from KB-sized footer stats alone — no data pages are opened for a
-    skipped split.  Walls compare the pruned read against the
-    full-snapshot read through the same DataSource."""
+    skipped file.  `full_read_splits` is the native scan's split count
+    for the whole snapshot, which must reach the session's cores rather
+    than one split per partition directory.  Walls compare the pruned
+    read against the full-snapshot read."""
     from snapshot_s3_util_spark.io import load_table
     from snapshot_s3_util_spark.sources.sinks import _SNAP_KR_HI, _SNAP_KR_LO
     from snapshot_s3_util_spark.sources.snapshot_source import (
-        SnapshotReader,
-        register_snapshot_source,
+        plan_snapshot_files,
+        read_snapshot,
     )
 
     out = os.path.join("/tmp", f"s3u_spark_snapprune_{label}")
@@ -267,33 +269,22 @@ def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
         .parquet(out)
     )
     try:
-        schema = spark.createDataFrame(
-            [], "event_id bigint, ts timestamp, user_id bigint, "
-            "value double, props string, event_type string"
-        ).schema
-        kr = f"{_SNAP_KR_LO}:{_SNAP_KR_HI}"
+        kr = (_SNAP_KR_LO, _SNAP_KR_HI)
         t0 = time.perf_counter()
-        planned = sum(
-            len(p.files)
-            for p in SnapshotReader(schema, {"path": out, "key_range": kr}).partitions()
-        )
+        planned = len(plan_snapshot_files(out, key_range=kr))
         plan_wall = time.perf_counter() - t0
-        total = sum(
-            len(p.files) for p in SnapshotReader(schema, {"path": out}).partitions()
-        )
-        register_snapshot_source(spark)
+        total = len(plan_snapshot_files(out))
 
-        def read_wall(opts: dict) -> float:
-            reader = spark.read.format("hbase_snapshot").option("path", out)
-            for k, v in opts.items():
-                reader = reader.option(k, v)
-            reader.load().count()  # warm-up
+        def read_wall(**kw) -> float:
+            read_snapshot(spark, out, **kw).count()  # warm-up
             t0 = time.perf_counter()
-            reader.load().count()
+            read_snapshot(spark, out, **kw).count()
             return time.perf_counter() - t0
 
-        pruned_wall = read_wall({"key_range": kr})
-        full_wall = read_wall({})
+        pruned_wall = read_wall(key_range=kr)
+        full_wall = read_wall()
+        splits = read_snapshot(spark, out).rdd.getNumPartitions()
+        cores = spark.sparkContext.defaultParallelism
         res = {
             "total_files": total,
             "planned_files": planned,
@@ -301,11 +292,14 @@ def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
             "planning_wall_sec": round(plan_wall, 3),
             "pruned_read_wall_sec": round(pruned_wall, 3),
             "full_read_wall_sec": round(full_wall, 3),
+            "full_read_splits": splits,
+            "cores": cores,
         }
         print(
             f"{label:>10s} snapshot-pruning planned={planned}/{total} "
             f"files ({res['planned_frac']}) pruned-read "
-            f"{pruned_wall:.2f}s vs full {full_wall:.2f}s",
+            f"{pruned_wall:.2f}s vs full {full_wall:.2f}s, full read "
+            f"{splits} splits on {cores} cores",
             flush=True,
         )
         return res
@@ -315,24 +309,30 @@ def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
 
 def _snap_prune_section(snap: dict) -> list:
     lines = [
-        "\n## Snapshot DataSource planning-time pruning "
+        "\n## Snapshot read planning-time pruning "
         "(key_range 150:449)\n",
-        "\nThe DSv2 snapshot source's region analog: range-partitioned "
+        "\n`read_snapshot` plans on the driver and scans on Spark's "
+        "native Parquet reader. The region analog: range-partitioned "
         "spans of constant SIZE, so span count grows with the tier "
         "(8 per sf0.1-equivalent). A fixed rowkey scan range must then "
         "keep planned-file count ~flat while total files grow ~mult — "
-        "the footer-stat split skip (`snapshot_source.py`) deciding "
+        "the footer-stat file skip (`plan_snapshot_files`) deciding "
         "from KB-sized metadata only. `planning wall` is the whole "
-        "driver-side partition-planning pass including footer reads.\n",
+        "driver-side planning pass including footer reads. `full-read "
+        "splits` is the scan's split count for the whole snapshot, "
+        "which must reach the session's cores rather than one split per "
+        "`event_type` directory.\n",
         "\n| tier | total files | planned files | planned frac | "
-        "planning wall | pruned read | full read |\n"
-        "|---|---:|---:|---:|---:|---:|---:|\n",
+        "planning wall | pruned read | full read | full-read splits | "
+        "cores |\n"
+        "|---|---:|---:|---:|---:|---:|---:|---:|---:|\n",
     ]
     for label, r in snap.items():
         lines.append(
             f"| {label} | {r['total_files']} | {r['planned_files']} | "
             f"{r['planned_frac']} | {r['planning_wall_sec']}s | "
-            f"{r['pruned_read_wall_sec']}s | {r['full_read_wall_sec']}s |\n"
+            f"{r['pruned_read_wall_sec']}s | {r['full_read_wall_sec']}s | "
+            f"{r['full_read_splits']} | {r['cores']} |\n"
         )
     return lines
 
@@ -1222,8 +1222,9 @@ def main() -> int:
     ap.add_argument(
         "--snapshot-pruning",
         action="store_true",
-        help="measure the DSv2 snapshot source's planning-time split "
-        "pruning (planned vs total files) at base + each tier instead "
+        help="measure the snapshot reader's planning-time file "
+        "pruning (planned vs total files) and full-read split count at "
+        "base + each tier instead "
         "of the op set; merges into the cache and (with --report) "
         "renders its STRESS.md section",
     )
