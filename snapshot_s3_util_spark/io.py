@@ -2,9 +2,11 @@
 
 Mirrors the reference's data substrate (HBase snapshots exported as
 immutable files; SURVEY.md §1.1) onto columnar Parquet: one immutable
-parquet file per table per scale factor (TESTDATA.md). All reads go
-through :func:`load_table` so the single mandatory custom piece — the
-`events` nanosecond-timestamp normalization — lives in exactly one place.
+parquet file per table per scale factor (TESTDATA.md). Batch reads go
+through :func:`load_table` and stream reads through
+:func:`load_table_stream`; both apply one `events` timestamp
+normalization (:func:`_normalize_ts`), so that single mandatory custom
+piece lives in exactly one place.
 
 Scale notes (100 TB): `spark.read.parquet` on a directory tree gets
 file-listing parallelism, partition pruning and row-group skipping for
@@ -80,7 +82,6 @@ def load_table(
                 df = df.filter(F.col("ts") >= F.lit(_utc_ns(ts_min)))
             if ts_max is not None:
                 df = df.filter(F.col("ts") < F.lit(_utc_ns(ts_max)))
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":  # µs-encoded generation
             if ts_min is not None:
                 df = df.filter(
@@ -90,7 +91,41 @@ def load_table(
                 df = df.filter(
                     F.col("ts") < F.lit(ts_max).cast("timestamp_ntz")
                 )
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = _normalize_ts(df)
+    return df
+
+
+def load_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Stream one test table from where it lies, as a file source.
+
+    The streaming twin of :func:`load_table`: same raw schema, same
+    `events` timestamp normalization, and nothing written anywhere —
+    at 100 TB-of-stream the source is the landing directory itself, so
+    a staged copy would be a full write before the first micro-batch.
+
+    The path is a one-name Hadoop glob (``{events.parquet}``) because
+    the file source takes neither of the plain forms for both tier
+    layouts: a plain FILE path fails at the first trigger ("Option
+    'basePath' must be a directory"), and
+    ``option("pathGlobFilter", ...)`` on the tier directory streams 0
+    rows when ``<name>.parquet`` is a directory of part files (the
+    stress-tier layout). The glob matches exactly that one name and
+    reads every part file under it in either layout.
+    """
+    ensure_conf(spark)
+    raw = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    stream = spark.readStream.schema(raw).parquet(f"{sf_dir}/{{{name}.parquet}}")
+    return _normalize_ts(stream) if name == "events" else stream
+
+
+def _normalize_ts(df: DataFrame) -> DataFrame:
+    """`events.ts` in either stored encoding -> session-UTC `timestamp`
+    (see :func:`load_table`); any other column type passes through."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -27,10 +27,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table_stream
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
-from snapshot_s3_util_spark.streaming.stream_ops import _run_to_table, _stage
+from snapshot_s3_util_spark.streaming.stream_ops import _run_to_table
 
 _STATE_SCHEMA = StructType(
     [
@@ -97,39 +97,35 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     + watermark so state ages out. Final state == batch GROUP BY,
     which the oracle asserts.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_state_")
-    try:
-        stream = _stage(spark, sf_dir, tmp)
-        profiled = (
-            stream.select("user_id", "ts", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _update_profile,
-                outputStructType=_OUTPUT_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
+    stream = load_table_stream(spark, sf_dir, "events")
+    profiled = (
+        stream.select("user_id", "ts", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _update_profile,
+            outputStructType=_OUTPUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        table, _ = _run_to_table(profiled, "update")
-        # update mode may emit a row per micro-batch per key; keep the
-        # final (max n_events) emission per user
-        from pyspark.sql import Window
+    )
+    table, _ = _run_to_table(profiled, "update")
+    # update mode may emit a row per micro-batch per key; keep the
+    # final (max n_events) emission per user
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        return (
-            table.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "user_id",
-                "n_events",
-                F.round("sum_value", 4).alias("sum_value"),
-                "last_ts",
-            )
-            .localCheckpoint(eager=True)
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        table.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            "n_events",
+            F.round("sum_value", 4).alias("sum_value"),
+            "last_ts",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .localCheckpoint(eager=True)
+    )
 
 
 # --- transformWithStateInPandas (Spark 4 stateful API) -----------------
@@ -318,7 +314,7 @@ def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider",
             )
-        stream = _stage(spark, sf_dir, tmp)
+        stream = load_table_stream(spark, sf_dir, "events")
         grouped = stream.select("user_id", "value").groupBy("user_id")
         if use_tws:
             ranked = grouped.transformWithStateInPandas(
@@ -395,7 +391,7 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tmp = tempfile.mkdtemp(prefix="s3u_stream_ssread_")
     try:
-        stream = _stage(spark, sf_dir, tmp)
+        stream = load_table_stream(spark, sf_dir, "events")
         agg = stream.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),

@@ -6,10 +6,18 @@ DataFrame — the batch-equivalence discipline of SURVEY §5: a streaming
 query over a bounded file source must converge to the batch answer, so
 the DuckDB oracle checks the streaming result end-to-end.
 
+Sources: an op whose stream is `events` as stored streams the tier
+table where it lies (`io.load_table_stream`) — nothing is copied
+before the first micro-batch. Only ops whose stream differs from
+`events` write their own source dir: `stream_watermark_late` (two
+arrival phases), `stream_left_outer_watermark` (sentinel rows) and
+`stream_cdc_upsert` (a derived change feed).
+
 Scale notes: watermarks bound state (without one, window state grows
-forever); at 100 TB-of-stream the state store moves to RocksDB
-(`spark.sql.streaming.stateStore.providerClass`) and the file source
-becomes Kafka — the query shapes below are unchanged.
+forever); at 100 TB-of-stream the file source is the landing
+directory itself (or Kafka) and the state store moves to RocksDB
+(`spark.sql.streaming.stateStore.providerClass`) — the query shapes
+below are unchanged.
 """
 
 from __future__ import annotations
@@ -21,7 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, load_table_stream
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import (
     EVENTS_REL,
@@ -32,14 +40,6 @@ from snapshot_s3_util_spark.sql_helpers import (
 )
 
 _counter = itertools.count()
-
-
-def _stage(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
-    """Write events once as the streaming source dir; return readStream."""
-    ev = load_table(spark, sf_dir, "events")
-    src = f"{tmp}/src"
-    ev.write.mode("overwrite").parquet(src)
-    return spark.readStream.schema(ev.schema).parquet(src)
 
 
 def _run_to_table(
@@ -81,28 +81,24 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch `date_trunc('hour')` — the equivalence the oracle asserts.
     Watermark 2h bounds state to ~2 open hours per key.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_tumble_")
-    try:
-        src = _stage(spark, sf_dir, tmp)
-        agg = (
-            src.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
+    src = load_table_stream(spark, sf_dir, "events")
+    agg = (
+        src.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        table, _ = _run_to_table(agg, "complete")
-        return (
-            table.select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    table, _ = _run_to_table(agg, "complete")
+    return (
+        table.select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        ).localCheckpoint(eager=True)
+    )
 
 
 @register(
@@ -130,28 +126,24 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     0..3 slots back — every event lands in exactly window_len/slide
     windows, which is also the streaming state-size multiplier.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_slide_")
-    try:
-        src = _stage(spark, sf_dir, tmp)
-        agg = (
-            src.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
+    src = load_table_stream(spark, sf_dir, "events")
+    agg = (
+        src.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        table, _ = _run_to_table(agg, "complete")
-        return (
-            table.select(
-                F.col("w.start").alias("window_start"),
-                "event_type",
-                "n_events",
-                "sum_value",
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    table, _ = _run_to_table(agg, "complete")
+    return (
+        table.select(
+            F.col("w.start").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        ).localCheckpoint(eager=True)
+    )
 
 
 @register(
@@ -188,29 +180,25 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap after its last event. The oracle sessionizes in SQL (lag +
     cumulative-sum), per SURVEY §2B's verified formulation.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_sess_")
-    try:
-        src = _stage(spark, sf_dir, tmp)
-        agg = (
-            src.withWatermark("ts", "2 hours")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
+    src = load_table_stream(spark, sf_dir, "events")
+    agg = (
+        src.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        table, _ = _run_to_table(agg, "complete")
-        return (
-            table.select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-                "sum_value",
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    table, _ = _run_to_table(agg, "complete")
+    return (
+        table.select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        ).localCheckpoint(eager=True)
+    )
 
 
 _WATERMARK_LATE_ORACLE = """
@@ -306,22 +294,16 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a watermark the dedup state ages out instead of growing
     forever.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_dedup_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        doubled = ev.unionByName(ev)
-        src = f"{tmp}/src"
-        doubled.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        agg = (
-            stream.dropDuplicates(["event_id"])
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_unique"))
-        )
-        table, _ = _run_to_table(agg, "complete")
-        return table.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    doubled = load_table_stream(spark, sf_dir, "events").unionByName(
+        load_table_stream(spark, sf_dir, "events")
+    )
+    agg = (
+        doubled.dropDuplicates(["event_id"])
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_unique"))
+    )
+    table, _ = _run_to_table(agg, "complete")
+    return table.localCheckpoint(eager=True)
 
 
 @register(
@@ -347,24 +329,20 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     (or a Delta/parquet table re-read per trigger for slowly-changing
     dims); the stream never shuffles for the join.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_enrich_")
-    try:
-        src = _stage(spark, sf_dir, tmp)
-        cust = load_table(spark, sf_dir, "customer").select(
-            "c_custkey", "c_mktsegment"
+    src = load_table_stream(spark, sf_dir, "events")
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_mktsegment"
+    )
+    agg = (
+        src.join(F.broadcast(cust), src.user_id == cust.c_custkey)
+        .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        agg = (
-            src.join(F.broadcast(cust), src.user_id == cust.c_custkey)
-            .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-        )
-        table, _ = _run_to_table(agg, "complete")
-        return table.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    table, _ = _run_to_table(agg, "complete")
+    return table.localCheckpoint(eager=True)
 
 
 @register(
@@ -394,49 +372,40 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamps, so the difference is exact (a seconds-granularity diff
     would disagree on boundary-crossing semantics between engines).
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_ssjoin_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        src_dir = f"{tmp}/src"
-        ev.write.mode("overwrite").parquet(src_dir)
-        views = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "2 hours")
+    views = (
+        load_table_stream(spark, sf_dir, "events")
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("v_ts"),
         )
-        purchases = (
-            spark.readStream.schema(ev.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "2 hours")
+        .withWatermark("v_ts", "2 hours")
+    )
+    purchases = (
+        load_table_stream(spark, sf_dir, "events")
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = views.join(
-            purchases,
-            F.expr(
-                "v_user = p_user AND p_ts >= v_ts "
-                "AND p_ts <= v_ts + interval 1 hour"
-            ),
-        ).select(
-            F.col("v_user").alias("user_id"),
-            "view_id",
-            "purchase_id",
-            (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lag_us"),
-        )
-        table, _ = _run_to_table(joined, "append")
-        return table.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .withWatermark("p_ts", "2 hours")
+    )
+    joined = views.join(
+        purchases,
+        F.expr(
+            "v_user = p_user AND p_ts >= v_ts "
+            "AND p_ts <= v_ts + interval 1 hour"
+        ),
+    ).select(
+        F.col("v_user").alias("user_id"),
+        "view_id",
+        "purchase_id",
+        (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lag_us"),
+    )
+    table, _ = _run_to_table(joined, "append")
+    return table.localCheckpoint(eager=True)
 
 
 # Micro-batches arriving in more partitions than this get a REBALANCE
@@ -448,9 +417,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition column first bounds it at ~|event_types| files per epoch
 # (AQE may split genuinely hot types — acceptable: every split is
 # advisory-sized, never tiny). Gated on the OBSERVED partition count so
-# the local staged source (arrives in <= a handful of partitions; file
-# count already minimal, r14 measured) never pays the extra shuffle —
-# the production regime opts in by its own geometry, not by conf.
+# a small local source (a test tier's `events` arrives in <= a handful
+# of partitions; file count already minimal, r14 measured) never pays
+# the extra shuffle — the production regime opts in by its own
+# geometry, not by conf.
 _EXPORT_REBALANCE_MIN_PARTS = 8
 
 
@@ -495,7 +465,7 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="s3u_stream_export_")
     out = f"{tmp}/export"
     try:
-        stream = _stage(spark, sf_dir, tmp)
+        stream = load_table_stream(spark, sf_dir, "events")
 
         def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
             _export_write_partitioned(batch_df, out, "event_type")
@@ -560,36 +530,32 @@ def stream_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count state is |windows|x|active users|, and the serving rank
     touches only the window being read.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_spark_stream_topk_")
-    try:
-        stream = _stage(spark, sf_dir, tmp)
-        counts = stream.groupBy(
-            F.window("ts", _TOPK_WIN).alias("w"), "user_id"
-        ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-        tbl, _ = _run_to_table(
-            counts.select(
-                F.col("w.start").alias("window_start"), "user_id", "n_events"
-            ),
-            "complete",
-        )
-        from pyspark.sql import Window
+    stream = load_table_stream(spark, sf_dir, "events")
+    counts = stream.groupBy(
+        F.window("ts", _TOPK_WIN).alias("w"), "user_id"
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
+    tbl, _ = _run_to_table(
+        counts.select(
+            F.col("w.start").alias("window_start"), "user_id", "n_events"
+        ),
+        "complete",
+    )
+    from pyspark.sql import Window
 
-        rw = Window.partitionBy("window_start").orderBy(
-            F.col("n_events").desc(), F.col("user_id")
+    rw = Window.partitionBy("window_start").orderBy(
+        F.col("n_events").desc(), F.col("user_id")
+    )
+    return (
+        tbl.withColumn("rnk", F.row_number().over(rw).cast("bigint"))
+        .filter(F.col("rnk") <= _TOPK_K)
+        .select(
+            "window_start",
+            F.col("user_id").cast("bigint").alias("user_id"),
+            "n_events",
+            "rnk",
         )
-        return (
-            tbl.withColumn("rnk", F.row_number().over(rw).cast("bigint"))
-            .filter(F.col("rnk") <= _TOPK_K)
-            .select(
-                "window_start",
-                F.col("user_id").cast("bigint").alias("user_id"),
-                "n_events",
-                "rnk",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        .localCheckpoint()
+    )
 
 
 _CDC_ORACLE = f"""
@@ -912,16 +878,14 @@ def stream_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="s3u_stream_replay_")
     out = f"{tmp}/export"
     ckpt = f"{tmp}/ckpt"
+
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_df.write.mode("append").parquet(out)
+
     try:
-        src = _stage(spark, sf_dir, tmp)
-
-        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.write.mode("append").parquet(out)
-
         for _ in range(2):  # pass 1 writes; pass 2 must be a no-op
             q = (
-                spark.readStream.schema(src.schema)
-                .parquet(f"{tmp}/src")
+                load_table_stream(spark, sf_dir, "events")
                 .writeStream.foreachBatch(write_batch)
                 .option("checkpointLocation", ckpt)
                 .start()

@@ -66,7 +66,7 @@ _BACKUP_JOBS = {
     "hb_export_import_cycle": 7,
     "source_hbase_snapshot": 5,
     "sink_s3_layout": 6,
-    "stream_foreach_batch_export": 7,
+    "stream_foreach_batch_export": 6,
     "hb_manifest_verify": 3,
     "topk_per_group": 3,
     "llm_dedup_exact": 3,

@@ -129,15 +129,23 @@ STRESS_OPS = (
 )
 
 _COPY_TABLES = ("customer", "supplier", "nation", "region", "part")
+TIER_TABLES = (
+    "documents", "embeddings", "orders", "lineitem", "events", *_COPY_TABLES,
+)
 _TIMED_RUNS = 3
 
 
-def build_tier(spark, base: str, out: str, mult: int) -> None:
+def build_tier(
+    spark, base: str, out: str, mult: int, tables=TIER_TABLES
+) -> None:
+    """Write the ``tables`` of the ``mult`` x tier into ``out``."""
     from pyspark.sql import functions as F
 
     os.makedirs(out, exist_ok=True)
 
     def replicate(table: str, transform):
+        if table not in tables:
+            return
         # One plan regardless of mult (a 100-way union of per-replica
         # transforms bloats Catalyst): broadcast-crossJoin a replica-id
         # range and express the per-replica transform over the _rk
@@ -230,7 +238,7 @@ def build_tier(spark, base: str, out: str, mult: int) -> None:
             "event_id", offset("event_id", n_evt, ev.schema)
         ).withColumn("user_id", offset("user_id", n_usr, ev.schema)),
     )
-    for t in _COPY_TABLES:
+    for t in set(_COPY_TABLES) & set(tables):
         shutil.copy(
             os.path.join(base, f"{t}.parquet"), os.path.join(out, f"{t}.parquet")
         )
@@ -450,9 +458,12 @@ def measure_streaming_rate(spark, label: str, sf_dir: str) -> dict:
     batch-equivalent but carried no measured rate).
 
     Drives `stream_foreach_batch_export`'s exact pipeline shape —
-    file-source readStream -> foreachBatch partitioned parquet sink —
-    but staged into MANY source files with maxFilesPerTrigger, so the
-    run is a genuine multi-batch stream, then reads the engine's own
+    file-source readStream -> foreachBatch partitioned parquet sink.
+    The op itself streams `events` in place; this measurement keeps
+    its own 16-file copy of it instead, because at sf0.1 `events` is
+    one file and a one-file source is one micro-batch. With
+    maxFilesPerTrigger over the copy the run is a genuine multi-batch
+    stream. It then reads the engine's own
     StreamingQueryProgress: per-trigger input rows and execution
     times.  Throughput = total rows / sum(trigger walls); latency =
     median trigger execution.  At 100 TB/day these numbers scale with
@@ -986,20 +997,27 @@ def measure(spark, ops, sf_dir: str) -> dict[str, dict]:
             t0 = time.perf_counter()
             _materialize(fn(spark, sf_dir))
             samples.append(time.perf_counter() - t0)
+        jobs = stats.new_jobs()
         # keyed by stage attempt: a stage listed by two jobs counts once
-        own = {
-            (st["stageId"], st["attemptId"]): st["shuffleWriteBytes"]
-            for job in stats.new_jobs() for st in job["stages"]
+        stages = {
+            (st["stageId"], st["attemptId"]): st
+            for job in jobs for st in job["stages"]
         }
+        own = {k: st["shuffleWriteBytes"] for k, st in stages.items()}
+        written = sum(st["outputBytes"] for st in stages.values())
         out[name] = {
             "wall_sec": round(statistics.median(samples), 3),
             "shuffle_write_bytes_per_run": int(sum(own.values()) / _TIMED_RUNS),
             "max_stage_shuffle_write_bytes": max(own.values(), default=0),
+            "output_bytes_per_run": int(written / _TIMED_RUNS),
+            "jobs_per_run": len(jobs) / _TIMED_RUNS,
         }
         print(
             f"{sf_dir.rstrip('/').rsplit('/', 1)[-1]:>10s} {name:28s} "
             f"{out[name]['wall_sec']:7.2f}s "
-            f"shuffle/run={out[name]['shuffle_write_bytes_per_run']:>12,d}B",
+            f"shuffle/run={out[name]['shuffle_write_bytes_per_run']:>12,d}B "
+            f"output/run={out[name]['output_bytes_per_run']:>12,d}B "
+            f"jobs/run={out[name]['jobs_per_run']:g}",
             flush=True,
         )
     return out
@@ -1316,12 +1334,22 @@ def main() -> int:
     else:
         tier_dirs = [(args.mult, args.out)]
 
+    # the snapshot-pruning measurement reads only events
+    need = ("events",) if args.snapshot_pruning else TIER_TABLES
     for mult, out in tier_dirs:
         if args.rebuild and os.path.exists(out):
             shutil.rmtree(out)
-        if not os.path.exists(os.path.join(out, "documents.parquet")):
-            print(f"building {mult}x tier at {out} ...", flush=True)
-            build_tier(spark, args.base, out, mult)
+        missing = [
+            t for t in need if not os.path.exists(os.path.join(out, f"{t}.parquet"))
+        ]
+        if missing:
+            print(
+                f"building {mult}x tier at {out} ({', '.join(missing)}) ...",
+                flush=True,
+            )
+            t0 = time.perf_counter()
+            build_tier(spark, args.base, out, mult, missing)
+            print(f"built in {time.perf_counter() - t0:.1f}s", flush=True)
 
     prev_snap = prev_capfill = prev_rate = prev_mh = prev_pcf = None
     if os.path.exists(cache_path):
