@@ -569,11 +569,16 @@ def scan_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from snapshot_s3_util_spark.sources.snapshot_source import (
+        read_snapshot,
+        write_snapshot,
+    )
+
     out = tempfile.mkdtemp(prefix="s3u_spark_skew_")
     try:
         ev = load_table(spark, sf_dir, "events")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        back = spark.read.parquet(out)
+        write_snapshot(ev, out)
+        back = read_snapshot(spark, out)
         p = back.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.countDistinct("user_id").cast("bigint").alias("n_users"),

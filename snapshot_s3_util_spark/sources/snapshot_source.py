@@ -1,23 +1,31 @@
-"""Read an exported snapshot AS a snapshot, on Spark's native Parquet scan.
+"""The snapshot format, written and read in one place.
 
 The reference reads HBase snapshots (manifest + immutable HFile refs)
 via `TableSnapshotInputFormat`; the engine's columnar equivalent is a
-snapshot directory written by `sources/sinks.py`:
+snapshot directory of `events` rows:
 
     <root>/<bucket>/<prefix>/<snapshot_name>/
         event_type=<v>/part-*.parquet     (immutable "HFiles")
 
-The snapshot-specific work is planning, and it stays on the driver:
-list the partition directories (the region analog), drop those outside
-`partitions`, and drop files whose footer rowkey range cannot overlap
-`key_range` (the `Scan(startRow, stopRow)` region skip), reading only
-KB-sized footers. A production bridge would take the ranges from the
-snapshot manifest instead, with the same planning shape. The surviving
-files go to Spark's vectorized Parquet scan, which splits them by size
-across every core, reads both export timestamp formats (INT96 and INT64
-microseconds), maps the hive NULL directory to SQL NULL and narrows the
-decoded columns to what the query selects (the column-family pruning
-analog).
+This module owns that layout. `write_snapshot` is the only engine code
+that writes it, and it refuses a frame whose columns differ from
+`SCHEMA`: a read with an explicit schema would otherwise fill a missing
+column with NULLs without an error. `read_snapshot` reads it back with
+`SCHEMA`, so no read infers a schema.
+
+The snapshot-specific work of a read is planning, and it stays on the
+driver: list the partition directories (the region analog), drop those
+outside `partitions`, and drop files whose footer rowkey range cannot
+overlap `key_range` (the `Scan(startRow, stopRow)` region skip),
+reading only KB-sized footers. A production bridge would take the
+ranges from the snapshot manifest instead, with the same planning
+shape. The surviving files go to Spark's vectorized Parquet scan,
+which splits them by size across every core, reads both export
+timestamp formats (INT96 and INT64 microseconds), maps the hive NULL
+directory to SQL NULL and narrows the decoded columns to what the
+query selects (the column-family pruning analog). A read with nothing
+to prune hands the root to that scan directly, so it also runs on
+object-store paths the local planner cannot list.
 """
 
 from __future__ import annotations
@@ -34,6 +42,7 @@ SCHEMA = (
     "props string, event_type string"
 )
 KEY_COL = "event_id"
+_SCHEMA_DTYPES = sorted(tuple(f.split()) for f in SCHEMA.split(", "))
 
 
 def footer_key_range(md) -> tuple | None:
@@ -103,6 +112,19 @@ def _scan_paths(files: list[str]) -> list[str]:
     return paths
 
 
+def write_snapshot(df: DataFrame, root: str) -> None:
+    """Append `df` under `root` in the snapshot layout, one
+    `event_type=<v>` directory per value. Callers lay rows out first
+    (`repartitionByRange`, `sortWithinPartitions`, ...) as their files
+    need. Raises `ValueError`, before writing anything, when `df`'s
+    column names or types differ from `SCHEMA` (order is free)."""
+    if sorted(df.dtypes) != _SCHEMA_DTYPES:
+        raise ValueError(
+            f"snapshot frame columns {df.dtypes} do not match SCHEMA ({SCHEMA})"
+        )
+    df.write.mode("append").partitionBy("event_type").parquet(root)
+
+
 def read_snapshot(
     spark: SparkSession,
     root: str,
@@ -113,7 +135,11 @@ def read_snapshot(
     """The snapshot under `root` as a DataFrame with `SCHEMA`, scanning
     only the files `plan_snapshot_files` keeps. Under `key_range` the
     rows are filtered to it as well (pushed into the Parquet scan), so
-    NULL rowkeys are excluded, as `Scan(start, stop)` excludes them."""
+    NULL rowkeys are excluded, as `Scan(start, stop)` excludes them.
+    With neither `partitions` nor `key_range` there is nothing to plan,
+    and the root goes to the scan as it is."""
+    if partitions is None and key_range is None:
+        return spark.read.schema(SCHEMA).parquet(root)
     files = plan_snapshot_files(root, partitions, key_range)
     if files:
         df = (

@@ -424,16 +424,19 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXPORT_REBALANCE_MIN_PARTS = 8
 
 
-def _export_write_partitioned(df: DataFrame, out: str, by: str) -> None:
+def _export_write_partitioned(df: DataFrame, out: str) -> None:
     """The export sink's write path, factored out of the foreachBatch
     closure so tests can drive both regimes directly: below the gate
     the frame is written as-is (plan unchanged — no shuffle added to
-    fix a non-problem); above it, REBALANCE(by) clusters rows so each
-    partition directory gets ~1 well-sized file per epoch instead of
-    one file per (source-partition, value) pair."""
+    fix a non-problem); above it, REBALANCE(event_type) clusters rows
+    so each partition directory gets ~1 well-sized file per epoch
+    instead of one file per (source-partition, value) pair. Each
+    epoch appends to the snapshot through `write_snapshot`."""
+    from snapshot_s3_util_spark.sources.snapshot_source import write_snapshot
+
     if df.rdd.getNumPartitions() > _EXPORT_REBALANCE_MIN_PARTS:
-        df = df.hint("rebalance", by)
-    df.write.mode("append").partitionBy(by).parquet(out)
+        df = df.hint("rebalance", "event_type")
+    write_snapshot(df, out)
 
 
 @register(
@@ -462,13 +465,15 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     and order-insensitive fingerprints must equal the batch answer no
     matter how the source was sliced into batches.
     """
+    from snapshot_s3_util_spark.sources.snapshot_source import read_snapshot
+
     tmp = tempfile.mkdtemp(prefix="s3u_stream_export_")
     out = f"{tmp}/export"
     try:
         stream = load_table_stream(spark, sf_dir, "events")
 
         def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            _export_write_partitioned(batch_df, out, "event_type")
+            _export_write_partitioned(batch_df, out)
 
         q = (
             stream.writeStream.foreachBatch(write_batch)
@@ -477,7 +482,7 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.processAllAvailable()
         q.stop()
-        back = spark.read.parquet(out)
+        back = read_snapshot(spark, out)
         row_md5 = row_md5_col("event_id", "user_id")
         return (
             back.select("event_type", row_md5.alias("h"))

@@ -88,9 +88,9 @@ def test_export_same_rows_from_part_file_dir_in_any_batch_count(
     epochs = []
     write = stream_ops._export_write_partitioned
 
-    def counting_write(df, out, by):
+    def counting_write(df, out):
         epochs.append(df)
-        write(df, out, by)
+        write(df, out)
 
     parquet = DataStreamReader.parquet
 

@@ -154,7 +154,12 @@ def test_export_rebalance_gate_bounds_file_count(spark, tmp_path):
     )
 
     df = spark.range(0, 2000).select(
-        "id", (F.col("id") % 5).cast("string").alias("event_type")
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds("id").alias("ts"),
+        (F.col("id") % 7).alias("user_id"),
+        F.col("id").cast("double").alias("value"),
+        F.lit("{}").alias("props"),
+        (F.col("id") % 5).cast("string").alias("event_type"),
     )
 
     # ABOVE the gate: 32 source partitions, 5 types -> up to 160 files
@@ -162,7 +167,7 @@ def test_export_rebalance_gate_bounds_file_count(spark, tmp_path):
     many = df.repartition(32)
     assert many.rdd.getNumPartitions() > _EXPORT_REBALANCE_MIN_PARTS
     out_gated = str(tmp_path / "gated")
-    _export_write_partitioned(many, out_gated, "event_type")
+    _export_write_partitioned(many, out_gated)
     gated_files = glob.glob(f"{out_gated}/event_type=*/*.parquet")
     assert len(gated_files) <= 10, (
         f"REBALANCE did not bound the file fan-out: {len(gated_files)} "
@@ -177,7 +182,7 @@ def test_export_rebalance_gate_bounds_file_count(spark, tmp_path):
     few = df.repartition(2)
     assert few.rdd.getNumPartitions() <= _EXPORT_REBALANCE_MIN_PARTS
     out_plain = str(tmp_path / "plain")
-    _export_write_partitioned(few, out_plain, "event_type")
+    _export_write_partitioned(few, out_plain)
     plain_files = glob.glob(f"{out_plain}/event_type=*/*.parquet")
     assert len(plain_files) == 10, (
         "below-gate write was not left as-is: expected 2 tasks x 5 "

@@ -264,17 +264,15 @@ def measure_snapshot_pruning(spark, label: str, sf_dir: str, mult: int) -> dict:
     from snapshot_s3_util_spark.sources.snapshot_source import (
         plan_snapshot_files,
         read_snapshot,
+        write_snapshot,
     )
 
     out = os.path.join("/tmp", f"s3u_spark_snapprune_{label}")
     shutil.rmtree(out, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
-    (
-        ev.repartitionByRange(8 * mult, "event_id")
-        .sortWithinPartitions("event_id")
-        .write.mode("overwrite")
-        .partitionBy("event_type")
-        .parquet(out)
+    write_snapshot(
+        ev.repartitionByRange(8 * mult, "event_id").sortWithinPartitions("event_id"),
+        out,
     )
     try:
         kr = (_SNAP_KR_LO, _SNAP_KR_HI)
@@ -329,7 +327,8 @@ def _snap_prune_section(snap: dict) -> list:
         "driver-side planning pass including footer reads. `full-read "
         "splits` is the scan's split count for the whole snapshot, "
         "which must reach the session's cores rather than one split per "
-        "`event_type` directory.\n",
+        "`event_type` directory; with nothing to prune, the full read "
+        "hands the snapshot root to the scan unplanned.\n",
         "\n| tier | total files | planned files | planned frac | "
         "planning wall | pruned read | full read | full-read splits | "
         "cores |\n"
@@ -458,7 +457,8 @@ def measure_streaming_rate(spark, label: str, sf_dir: str) -> dict:
     batch-equivalent but carried no measured rate).
 
     Drives `stream_foreach_batch_export`'s exact pipeline shape —
-    file-source readStream -> foreachBatch partitioned parquet sink.
+    file-source readStream -> foreachBatch calling the op's own
+    `_export_write_partitioned` (REBALANCE gate, then `write_snapshot`).
     The op itself streams `events` in place; this measurement keeps
     its own 16-file copy of it instead, because at sf0.1 `events` is
     one file and a one-file source is one micro-batch. With
@@ -473,6 +473,9 @@ def measure_streaming_rate(spark, label: str, sf_dir: str) -> dict:
     import tempfile
 
     from snapshot_s3_util_spark.io import load_table
+    from snapshot_s3_util_spark.streaming.stream_ops import (
+        _export_write_partitioned,
+    )
 
     tmp = tempfile.mkdtemp(prefix="s3u_stream_rate_")
     src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
@@ -486,11 +489,7 @@ def measure_streaming_rate(spark, label: str, sf_dir: str) -> dict:
         )
 
         def write_batch(batch_df, epoch_id):
-            (
-                batch_df.write.mode("append")
-                .partitionBy("event_type")
-                .parquet(out)
-            )
+            _export_write_partitioned(batch_df, out)
 
         q = (
             stream.writeStream.foreachBatch(write_batch)
@@ -1218,6 +1217,55 @@ def _write_report(
     print(f"wrote {path}")
 
 
+def _tier_order(label: str) -> float:
+    """Sort key of a section row: the tier multiplier its label starts
+    with (`0.1x (sf0.01)`, `1x (sf0.1)`, `10x`), else last."""
+    try:
+        return float(label.split("x", 1)[0])
+    except ValueError:
+        return float("inf")
+
+
+def _merge_section(cache_path: str, base_dir: str, key: str, value: dict) -> dict:
+    """Merge ONE standalone-section measurement into the cache at
+    `cache_path` and return the cache.
+
+    Rows merge by label: a re-measured row replaces its cached one and
+    a row this run did not measure is kept, so a `--tiers 10` run keeps
+    a cached 100x row. Rows are ordered by tier multiplier.
+
+    When no cache exists (a first standalone run), create it with
+    empty base/tiers placeholders instead of discarding the fresh
+    measurement. A later full multi-tier run fills base/tiers and keeps
+    the section via the prev_* carry-over.
+    """
+    if os.path.exists(cache_path):
+        with open(cache_path) as fh:
+            cached = json.load(fh)
+    else:
+        print(
+            f"no op-table cache at {cache_path}; creating one with "
+            "empty base/tiers placeholders — run the full "
+            "multi-tier measurement to fill the op tables",
+            flush=True,
+        )
+        cached = {
+            "base": {},
+            "tiers": [],
+            "base_dir": base_dir,
+            "snapshot_pruning": None,
+            "simhash_capfill": None,
+            "streaming_rate": None,
+            "minhash_precision": None,
+            "perceptual_capfill": None,
+        }
+    rows = {**(cached.get(key) or {}), **value}
+    cached[key] = dict(sorted(rows.items(), key=lambda kv: _tier_order(kv[0])))
+    with open(cache_path, "w") as fh:
+        json.dump(cached, fh)
+    return cached
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
@@ -1364,41 +1412,6 @@ def main() -> int:
         except (OSError, ValueError):
             prev_snap = prev_capfill = prev_rate = prev_mh = prev_pcf = None
 
-    def _merge_section(key: str, value) -> dict:
-        """Merge ONE standalone-section measurement into the cache.
-
-        When no cache exists (a first standalone run), create it with
-        empty base/tiers placeholders instead of discarding the fresh
-        measurement (r11 ADVICE: the old guard printed the numbers and
-        silently dropped them, making the run unreproducible from the
-        cache). A later full multi-tier run fills base/tiers and keeps
-        the section via the prev_* carry-over.
-        """
-        if os.path.exists(cache_path):
-            with open(cache_path) as fh:
-                cached = json.load(fh)
-        else:
-            print(
-                f"no op-table cache at {cache_path}; creating one with "
-                "empty base/tiers placeholders — run the full "
-                "multi-tier measurement to fill the op tables",
-                flush=True,
-            )
-            cached = {
-                "base": {},
-                "tiers": [],
-                "base_dir": args.base,
-                "snapshot_pruning": None,
-                "simhash_capfill": None,
-                "streaming_rate": None,
-                "minhash_precision": None,
-                "perceptual_capfill": None,
-            }
-        cached[key] = value
-        with open(cache_path, "w") as fh:
-            json.dump(cached, fh)
-        return cached
-
     def _report_if_complete(cached: dict) -> None:
         """Render STRESS.md only when the op tables exist — rendering
         from placeholders would overwrite the committed report with an
@@ -1428,17 +1441,20 @@ def main() -> int:
         rate = {"1x (sf0.1)": measure_streaming_rate(spark, "base", args.base)}
         for mult, out in tier_dirs:
             rate[f"{mult}x"] = measure_streaming_rate(spark, str(mult), out)
-        _report_if_complete(_merge_section("streaming_rate", rate))
+        cached = _merge_section(cache_path, args.base, "streaming_rate", rate)
+        _report_if_complete(cached)
         return 0
 
     if args.simhash_capfill:
         capfill = measure_simhash_capfill(spark, args.base)
-        _report_if_complete(_merge_section("simhash_capfill", capfill))
+        cached = _merge_section(cache_path, args.base, "simhash_capfill", capfill)
+        _report_if_complete(cached)
         return 0
 
     if args.perceptual_capfill:
         pcf = measure_perceptual_capfill(spark, args.base)
-        _report_if_complete(_merge_section("perceptual_capfill", pcf))
+        cached = _merge_section(cache_path, args.base, "perceptual_capfill", pcf)
+        _report_if_complete(cached)
         return 0
 
     if args.snapshot_pruning:
@@ -1448,7 +1464,8 @@ def main() -> int:
         snap = {"1x (sf0.1)": measure_snapshot_pruning(spark, "base", args.base, 1)}
         for mult, out in tier_dirs:
             snap[f"{mult}x"] = measure_snapshot_pruning(spark, str(mult), out, mult)
-        _report_if_complete(_merge_section("snapshot_pruning", snap))
+        cached = _merge_section(cache_path, args.base, "snapshot_pruning", snap)
+        _report_if_complete(cached)
         return 0
 
     if args.minhash_precision:
@@ -1475,7 +1492,8 @@ def main() -> int:
                 }
         for mult, out in tier_dirs:
             prec[f"{mult}x"] = measure_minhash_precision(spark, f"{mult}x", out)
-        _report_if_complete(_merge_section("minhash_precision", prec))
+        cached = _merge_section(cache_path, args.base, "minhash_precision", prec)
+        _report_if_complete(cached)
         # r12 ADVICE gate: the prefilter cutoff must sit strictly
         # BELOW every tier's weakest true pair — recall has no verify
         # backstop past the prefilter, so a tier measuring
