@@ -25,10 +25,12 @@ A/B per frame family in OPTIMIZATION_r15.md §7, results identical.
 Racing stages of that job can transiently compute a partition twice;
 every lazily checkpointed frame is deterministic, so the duplicate is
 consistent. Checkpoints stay eager where (a) they must materialize
-before a staging dir they read is removed (temp-dir sinks, scans,
-streaming), (b) they are per-round frontiers feeding a broadcast
-build, where lazy would fold round compute into the broadcast job, or
-(c) a measured lazy A/B lost (the IVF centroids, reason at the site).
+before a staging dir they read is removed — `io.on_scratch` takes that
+checkpoint for every op that stages files (sinks, scans, streaming),
+(b) they are per-round frontiers feeding a broadcast build, where lazy
+would fold round compute into the broadcast job, or (c) a measured
+lazy A/B lost (the IVF centroids, reason at the site). Every eager
+checkpoint spells `eager=True` out.
 """
 
 from snapshot_s3_util_spark.registry import REGISTRY, register  # noqa: F401

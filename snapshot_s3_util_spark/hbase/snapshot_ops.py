@@ -796,7 +796,7 @@ def hb_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.length(F.encode(F.col("text"), "UTF-8")))
         .cast("bigint")
         .alias("bytes")
-    ).localCheckpoint()
+    ).localCheckpoint(eager=True)
     refs = files.select("source", "bucket", F.lit("orig").alias("tbl")).unionByName(
         files.filter(F.col("bucket") <= 2).select(
             "source", "bucket", F.lit("clone").alias("tbl")

@@ -8,6 +8,12 @@ through :func:`load_table` and stream reads through
 normalization (:func:`_normalize_ts`), so that single mandatory custom
 piece lives in exactly one place.
 
+The module also owns op scratch space: every op that writes data and
+reads it back (sinks, layout scans, streaming checkpoints) stages its
+files in a directory made, materialized against and removed by
+:func:`on_scratch` — locally a `tempfile` dir standing in for the S3
+bucket; at cluster scale the one place to point at shared storage.
+
 Scale notes (100 TB): `spark.read.parquet` on a directory tree gets
 file-listing parallelism, partition pruning and row-group skipping for
 free; the loaders below add nothing driver-side (no collect, no schema
@@ -16,7 +22,11 @@ inference loops), so they scale with the FileSourceScanExec machinery.
 
 from __future__ import annotations
 
+import functools
+import shutil
+import tempfile
 from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,6 +137,29 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     if ts_type == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def on_scratch(
+    fn: Callable[[SparkSession, str, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Give an op ``fn(spark, sf_dir, root)`` its own scratch dir.
+
+    The wrapped op is the registry's ``(spark, sf_dir)`` callable: it
+    creates ``root``, runs ``fn``, materializes the result with an
+    eager `localCheckpoint` (the frame reads files under ``root``, so
+    it must hold its rows before they go) and removes ``root`` however
+    ``fn`` exits. Stack it under ``@register``.
+    """
+
+    @functools.wraps(fn)
+    def op(spark: SparkSession, sf_dir: str) -> DataFrame:
+        root = tempfile.mkdtemp(prefix=f"s3u_{fn.__name__}_")
+        try:
+            return fn(spark, sf_dir, root).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return op
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.params import AHASH_BUCKET_SAMPLE, BAND_BUCKET_CAP
 from snapshot_s3_util_spark.registry import register
 
@@ -1418,7 +1418,8 @@ def _bmp_export_stage(out_dir: str):
     """,
     category="source",
 )
-def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def source_binary_files(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """`binaryFile` data source: the ingestion half of a multimodal
     pipeline — a directory of raw image FILES scanned distributedly
     into (path, modificationTime, length, content) rows, globbed with
@@ -1436,58 +1437,50 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxPartitionBytes` packing small files per task. doc_id recovers
     from the file NAME JVM-side (regexp_extract), not from content.
     """
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="s3u_binsrc_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id")
-        manifest = docs.mapInPandas(
-            _bmp_export_stage(f"{tmp}/imgs"),
-            schema="doc_id long, path string, n_bytes long",
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    manifest = docs.mapInPandas(
+        _bmp_export_stage(f"{tmp}/imgs"),
+        schema="doc_id long, path string, n_bytes long",
+    )
+    n_files = manifest.count()  # materialize the export
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bmp")
+        .load(f"{tmp}/imgs")
+        .select(
+            F.regexp_extract(F.col("path"), r"img_(\d+)\.bmp$", 1)
+            .cast("bigint")
+            .alias("doc_id"),
+            "length",
+            "content",
         )
-        n_files = manifest.count()  # materialize the export
-        files = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.bmp")
-            .load(f"{tmp}/imgs")
-            .select(
-                F.regexp_extract(F.col("path"), r"img_(\d+)\.bmp$", 1)
-                .cast("bigint")
-                .alias("doc_id"),
-                "length",
-                "content",
+    )
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            feats = pdf["content"].map(decode_bmp)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "n_bytes": feats.map(lambda d: d["n_bytes"]).astype(
+                        "int64"
+                    ),
+                    "width": feats.map(lambda d: d["width"]).astype("int64"),
+                    "height": feats.map(lambda d: d["height"]).astype(
+                        "int64"
+                    ),
+                    "sum_r": feats.map(lambda d: d["sum_r"]).astype("int64"),
+                    "len_ok": feats.map(lambda d: d["n_bytes"])
+                    == pdf["length"],
+                }
             )
-        )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                feats = pdf["content"].map(decode_bmp)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "n_bytes": feats.map(lambda d: d["n_bytes"]).astype(
-                            "int64"
-                        ),
-                        "width": feats.map(lambda d: d["width"]).astype("int64"),
-                        "height": feats.map(lambda d: d["height"]).astype(
-                            "int64"
-                        ),
-                        "sum_r": feats.map(lambda d: d["sum_r"]).astype("int64"),
-                        "len_ok": feats.map(lambda d: d["n_bytes"])
-                        == pdf["length"],
-                    }
-                )
-
-        out = files.mapInPandas(
-            decode,
-            schema="doc_id long, n_bytes long, width long, height long,"
-            " sum_r long, len_ok boolean",
-        ).localCheckpoint(eager=True)
-        assert out.count() == n_files
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    assert files.count() == n_files
+    return files.mapInPandas(
+        decode,
+        schema="doc_id long, n_bytes long, width long, height long,"
+        " sum_r long, len_ok boolean",
+    )
 
 
 # ---------------------------------------------------- PNG (pure stdlib)

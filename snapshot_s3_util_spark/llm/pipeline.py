@@ -1611,7 +1611,7 @@ def llm_bt_preference_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("i", "j")
         .agg(F.sum("n").cast("double").alias("n"))
-        .localCheckpoint()
+        .localCheckpoint(eager=True)
     )
     srcs = cells.select("i").distinct()
     n_sources = srcs.count()  # catalog-sized scalar
@@ -1625,7 +1625,7 @@ def llm_bt_preference_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .select("source", F.coalesce("wins", F.lit(0.0)).alias("wins"))
-        .localCheckpoint()
+        .localCheckpoint(eager=True)
     )
     p = wins.select("source", F.lit(1.0 / n_sources).alias("p"))
     w_all = Window.partitionBy()
@@ -1656,7 +1656,7 @@ def llm_bt_preference_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         p = raw.select(
             "source", (F.col("p") / F.sum("p").over(w_all)).alias("p")
-        ).localCheckpoint()
+        ).localCheckpoint(eager=True)
     n_comps = cells.groupBy("i").agg(
         F.sum("n").cast("bigint").alias("comparisons")
     ).withColumnRenamed("i", "source")

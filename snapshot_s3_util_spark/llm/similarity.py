@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_embeddings, load_table
+from snapshot_s3_util_spark.io import load_embeddings, load_table, on_scratch
 from snapshot_s3_util_spark.params import N_PROBES, SIM_TOPK
 from snapshot_s3_util_spark.registry import register
 
@@ -1791,7 +1791,10 @@ def _ivfk_partitioned_layout(spark: SparkSession, sf_dir: str, out: str):
 
 @register("llm_sim_ann_ivf_partitioned", oracle=_ivf_kmeans_oracle(),
           category="llm")
-def llm_sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def llm_sim_ann_ivf_partitioned(
+    spark: SparkSession, sf_dir: str, out: str
+) -> DataFrame:
     """`llm_sim_ann_ivf_kmeans` with its 100 TB storage claim made
     REAL instead of docstring-only (r12 verdict ask #2): the cluster
     assignment is WRITTEN as a `cid` partition column, and the probe
@@ -1812,27 +1815,18 @@ def llm_sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runnability; a deployment writes the layout once to shared
     storage.
     """
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="s3u_spark_ivfpart_")
-    try:
-        cids, back, probe = _ivfk_partitioned_layout(spark, sf_dir, out)
-        return (
-            back.crossJoin(F.broadcast(probe))
-            .withColumn("raw", _cos("e", "pe"))
-            .orderBy(F.col("raw").desc(), F.col("vec_id"))
-            .limit(SIM_TOPK)
-            .select(
-                "vec_id",
-                # partition-column read-back infers int; restore the
-                # assignment frame's long so the schema matches the
-                # in-memory twin and the shared oracle
-                F.col("cid").cast("long").alias("cluster_id"),
-                F.round("raw", 6).alias("cos_sim"),
-            )
-            # materialize before the scratch layout disappears
-            .localCheckpoint(eager=True)
+    cids, back, probe = _ivfk_partitioned_layout(spark, sf_dir, out)
+    return (
+        back.crossJoin(F.broadcast(probe))
+        .withColumn("raw", _cos("e", "pe"))
+        .orderBy(F.col("raw").desc(), F.col("vec_id"))
+        .limit(SIM_TOPK)
+        .select(
+            "vec_id",
+            # partition-column read-back infers int; restore the
+            # assignment frame's long so the schema matches the
+            # in-memory twin and the shared oracle
+            F.col("cid").cast("long").alias("cluster_id"),
+            F.round("raw", 6).alias("cos_sim"),
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
 
@@ -289,7 +289,8 @@ _HLL_RUN_SPLIT = "2024-01-16"  # run 1 = days before, run 2 = days at/after
     """,
     category="agg",
 )
-def agg_hll_sketch_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def agg_hll_sketch_persist(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """PERSISTED-sketch re-aggregability: per-day HLL sketch BYTES are
     written to parquet by two separate \"ingest runs\" (days before /
     at-after {_HLL_RUN_SPLIT}), read back cold, and `hll_union_agg`-
@@ -311,52 +312,44 @@ def agg_hll_sketch_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes; the merge reads only (event_type, sketch) columns back and
     exchanges |event_types| x |days| kilobyte rows — never raw events.
     """
-    import shutil
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
-    out = tempfile.mkdtemp(prefix="s3u_hll_persist_")
-    try:
-        split = F.lit(_HLL_RUN_SPLIT).cast("date")
-        for run, pred in (
-            ("run1", F.col("day") < split),
-            ("run2", F.col("day") >= split),
-        ):
+    split = F.lit(_HLL_RUN_SPLIT).cast("date")
+    for run, pred in (
+        ("run1", F.col("day") < split),
+        ("run2", F.col("day") >= split),
+    ):
+        (
+            ev.filter(pred)
+            .groupBy("event_type", "day")
+            .agg(F.expr("hll_sketch_agg(user_id)").alias("sketch"))
+            .write.mode("overwrite")
+            .parquet(f"{out}/{run}")
+        )
+    back = spark.read.parquet(f"{out}/run1", f"{out}/run2")
+    merged = back.groupBy("event_type").agg(
+        F.expr("hll_sketch_estimate(hll_union_agg(sketch))").alias(
+            "est_users"
+        ),
+        F.count(F.lit(1)).cast("bigint").alias("n_sketches"),
+    )
+    exact = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users")
+    )
+    return (
+        merged.join(F.broadcast(exact), "event_type")
+        .select(
+            "event_type",
+            "exact_users",
+            "n_sketches",
             (
-                ev.filter(pred)
-                .groupBy("event_type", "day")
-                .agg(F.expr("hll_sketch_agg(user_id)").alias("sketch"))
-                .write.mode("overwrite")
-                .parquet(f"{out}/{run}")
-            )
-        back = spark.read.parquet(f"{out}/run1", f"{out}/run2")
-        merged = back.groupBy("event_type").agg(
-            F.expr("hll_sketch_estimate(hll_union_agg(sketch))").alias(
-                "est_users"
-            ),
-            F.count(F.lit(1)).cast("bigint").alias("n_sketches"),
+                F.abs(F.col("est_users") - F.col("exact_users"))
+                / F.col("exact_users")
+                <= 0.05
+            ).alias("within_tol"),
         )
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
-        )
-        return (
-            merged.join(F.broadcast(exact), "event_type")
-            .select(
-                "event_type",
-                "exact_users",
-                "n_sketches",
-                (
-                    F.abs(F.col("est_users") - F.col("exact_users"))
-                    / F.col("exact_users")
-                    <= 0.05
-                ).alias("within_tol"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _JOIN_SALT = 8

@@ -497,7 +497,7 @@ def _bfs_hops(spark: SparkSession, sf_dir: str, keyed: bool) -> DataFrame:
     sym = (sym.repartition("u") if keyed else sym).localCheckpoint(eager=False)
     hops = spark.createDataFrame([(_BFS_SRC, 0)], "node int, hops int")
     for _ in range(_BFS_ROUNDS):
-        hops = _bfs_round(sym, hops, keyed).localCheckpoint()
+        hops = _bfs_round(sym, hops, keyed).localCheckpoint(eager=True)
     # nation is a true O(|nations|) dimension: broadcasting IT stays
     # correct at any scale, keyed or not
     return nation.join(
@@ -1550,7 +1550,7 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .distinct()
-            .localCheckpoint()
+            .localCheckpoint(eager=True)
         )
         bw = (
             bw.unionByName(
@@ -1559,7 +1559,7 @@ def graph_scc_fwbw(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .distinct()
-            .localCheckpoint()
+            .localCheckpoint(eager=True)
         )
     f = fw.withColumn("in_f", F.lit(True))
     b = bw.withColumn("in_b", F.lit(True))

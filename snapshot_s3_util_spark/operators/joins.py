@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.params import ANTI_JOIN_CUTOFF
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
@@ -1302,7 +1302,8 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="join",
 )
-def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def join_partition_pruned_dim(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Dynamic Partition Pruning end-to-end: a day-partitioned fact
     landing zone joined to an INDEPENDENT calendar dimension filtered
     on an attribute (weekend flag) the fact table cannot derive
@@ -1318,33 +1319,25 @@ def join_partition_pruned_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts.  DuckDB's dayofweek is 0-Sunday while Spark's is
     1-Sunday — the oracle uses (0, 6) to mean the same Sat/Sun.
     """
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="s3u_spark_dppdim_")
-    try:
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.to_date(F.date_trunc("day", "ts"))
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "day", F.to_date(F.date_trunc("day", "ts"))
+    )
+    ev.write.mode("overwrite").partitionBy("day").parquet(out)
+    landed = spark.read.parquet(out)
+    dim = spark.sql(
+        "SELECT explode(sequence(DATE'2024-01-01', DATE'2024-01-30'))"
+        " AS day"
+    ).withColumn("is_weekend", F.dayofweek("day").isin(1, 7))
+    weekend = dim.filter(F.col("is_weekend")).select("day")
+    return (
+        landed.join(F.broadcast(weekend), "day")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.countDistinct("day").cast("bigint").alias("n_days"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        ev.write.mode("overwrite").partitionBy("day").parquet(out)
-        landed = spark.read.parquet(out)
-        dim = spark.sql(
-            "SELECT explode(sequence(DATE'2024-01-01', DATE'2024-01-30'))"
-            " AS day"
-        ).withColumn("is_weekend", F.dayofweek("day").isin(1, 7))
-        weekend = dim.filter(F.col("is_weekend")).select("day")
-        return (
-            landed.join(F.broadcast(weekend), "day")
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.countDistinct("day").cast("bigint").alias("n_days"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _SSJ_TAU = 0.6      # jaccard threshold

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.params import KEYRANGE_HI, KEYRANGE_LO
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import (
@@ -162,7 +162,8 @@ FROM customer
 
 
 @register("source_csv_permissive", oracle=_CSV_ORACLE, category="scan")
-def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def source_csv_permissive(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Messy-CSV ingestion with corrupt-record accounting: the raw-
     text landing zone every real pipeline starts from. Deterministic
     synthetic mess — every custkey%7==0 row carries a non-numeric
@@ -180,9 +181,6 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternatives you can't afford at 100 TB — silent loss or a dead
     job 90 TB in).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -203,37 +201,33 @@ def source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    root = tempfile.mkdtemp(prefix="s3u_spark_csvsrc_")
-    try:
-        lines.write.mode("overwrite").text(root)
-        schema = StructType(
-            [
-                StructField("custkey", LongType()),
-                StructField("name", StringType()),
-                StructField("acctbal", DoubleType()),
-                StructField("_corrupt", StringType()),
-            ]
-        )
-        parsed = spark.read.csv(
-            root,
-            schema=schema,
-            mode="PERMISSIVE",
-            columnNameOfCorruptRecord="_corrupt",
-        )
-        return parsed.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(F.col("_corrupt").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_corrupt"),
-            F.sum(F.when(F.col("_corrupt").isNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_good"),
-            F.round(
-                F.sum(F.when(F.col("_corrupt").isNull(), F.col("acctbal"))), 2
-            ).alias("sum_acctbal"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    lines.write.mode("overwrite").text(root)
+    schema = StructType(
+        [
+            StructField("custkey", LongType()),
+            StructField("name", StringType()),
+            StructField("acctbal", DoubleType()),
+            StructField("_corrupt", StringType()),
+        ]
+    )
+    parsed = spark.read.csv(
+        root,
+        schema=schema,
+        mode="PERMISSIVE",
+        columnNameOfCorruptRecord="_corrupt",
+    )
+    return parsed.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.when(F.col("_corrupt").isNotNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_corrupt"),
+        F.sum(F.when(F.col("_corrupt").isNull(), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_good"),
+        F.round(
+            F.sum(F.when(F.col("_corrupt").isNull(), F.col("acctbal"))), 2
+        ).alias("sum_acctbal"),
+    )
 
 
 _EVOLVE_ORACLE = f"""
@@ -259,7 +253,8 @@ GROUP BY 1
 
 
 @register("scan_schema_evolution", oracle=_EVOLVE_ORACLE, category="scan")
-def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def scan_schema_evolution(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Schema-evolution read: a dataset whose early files were written
     BEFORE a column existed (v0: 3 columns) and whose later files
     carry the new column (v1: +event_type), read as ONE table with
@@ -276,35 +271,27 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     a footer read per file at planning; pin the merged schema
     explicitly in production readers to avoid even that.
     """
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="s3u_spark_evolve_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.filter(F.col("event_id") % 2 == 0).select(
-            "event_id", "user_id", "value"
-        ).write.mode("overwrite").parquet(f"{root}/g=0")
-        ev.filter(F.col("event_id") % 2 == 1).select(
-            "event_id", "user_id", "value", "event_type"
-        ).write.mode("overwrite").parquet(f"{root}/g=1")
-        back = spark.read.option("mergeSchema", "true").parquet(
-            f"{root}/g=0", f"{root}/g=1"
-        )
-        return (
-            back.groupBy(
-                F.coalesce(F.col("event_type"), F.lit("<pre-schema>")).alias(
-                    "event_type"
-                )
+    ev = load_table(spark, sf_dir, "events")
+    ev.filter(F.col("event_id") % 2 == 0).select(
+        "event_id", "user_id", "value"
+    ).write.mode("overwrite").parquet(f"{root}/g=0")
+    ev.filter(F.col("event_id") % 2 == 1).select(
+        "event_id", "user_id", "value", "event_type"
+    ).write.mode("overwrite").parquet(f"{root}/g=1")
+    back = spark.read.option("mergeSchema", "true").parquet(
+        f"{root}/g=0", f"{root}/g=1"
+    )
+    return (
+        back.groupBy(
+            F.coalesce(F.col("event_type"), F.lit("<pre-schema>")).alias(
+                "event_type"
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+    )
 
 
 _LEDGER_SHARDS = 8
@@ -324,7 +311,8 @@ _LEDGER_DONE = 5  # shards 0..4 already processed
     """,
     category="scan",
 )
-def scan_incremental_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def scan_incremental_ledger(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Ledger-driven incremental ingest: a hive-partitioned landing
     zone ({_LEDGER_SHARDS} shards), a processed-partition ledger
     (shards 0..{_LEDGER_DONE} exclusive), and a run that discovers
@@ -346,44 +334,36 @@ def scan_incremental_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     but doesn't prune: DPP doesn't fire on a same-source semi join, so
     every footer would still be read — verified on the executed plan.)
     """
-    import shutil
-    import tempfile
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "shard", (F.col("user_id") % _LEDGER_SHARDS).cast("int")
+    )
+    ev.write.mode("overwrite").partitionBy("shard").parquet(out)
 
-    out = tempfile.mkdtemp(prefix="s3u_spark_ledger_")
-    try:
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "shard", (F.col("user_id") % _LEDGER_SHARDS).cast("int")
+    ledger = spark.createDataFrame(
+        [(i,) for i in range(_LEDGER_DONE)], "shard int"
+    )
+    landed = spark.read.parquet(out)
+    # Partition-catalog resolution: the inventory scan reads zero
+    # data columns (ReadSchema struct<>); the collected todo list
+    # is metadata bounded by |partitions|, not row data.
+    todo = [
+        r.shard
+        for r in (
+            landed.select(F.col("shard").cast("int").alias("shard"))
+            .distinct()
+            .join(F.broadcast(ledger), "shard", "anti")
+            .collect()
         )
-        ev.write.mode("overwrite").partitionBy("shard").parquet(out)
-
-        ledger = spark.createDataFrame(
-            [(i,) for i in range(_LEDGER_DONE)], "shard int"
+    ]
+    fresh = landed.filter(F.col("shard").isin(todo))
+    return (
+        fresh.groupBy(F.col("shard").cast("int").alias("shard"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-        landed = spark.read.parquet(out)
-        # Partition-catalog resolution: the inventory scan reads zero
-        # data columns (ReadSchema struct<>); the collected todo list
-        # is metadata bounded by |partitions|, not row data.
-        todo = [
-            r.shard
-            for r in (
-                landed.select(F.col("shard").cast("int").alias("shard"))
-                .distinct()
-                .join(F.broadcast(ledger), "shard", "anti")
-                .collect()
-            )
-        ]
-        fresh = landed.filter(F.col("shard").isin(todo))
-        return (
-            fresh.groupBy(F.col("shard").cast("int").alias("shard"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.countDistinct("user_id").cast("bigint").alias("n_users"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _DQ_ORACLE = """
@@ -552,7 +532,8 @@ def scan_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="scan",
 )
-def scan_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def scan_partition_skew_report(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Partition-layout skew telemetry for a hive-partitioned landing
     zone: rows and distinct keys per partition, each partition's skew
     factor (size ÷ mean partition size), and the largest-partition
@@ -566,43 +547,35 @@ def scan_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale each report row summarizes one directory's files);
     normalizers run on the |partitions| frame via one tiny broadcast.
     """
-    import shutil
-    import tempfile
-
     from snapshot_s3_util_spark.sources.snapshot_source import (
         read_snapshot,
         write_snapshot,
     )
 
-    out = tempfile.mkdtemp(prefix="s3u_spark_skew_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev, out)
-        back = read_snapshot(spark, out)
-        p = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev, out)
+    back = read_snapshot(spark, out)
+    p = back.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.countDistinct("user_id").cast("bigint").alias("n_users"),
+    )
+    s = p.agg(
+        F.sum("n_rows").cast("bigint").alias("total"),
+        F.count(F.lit(1)).cast("bigint").alias("n_parts"),
+        F.max("n_rows").cast("bigint").alias("mx"),
+    )
+    return (
+        p.crossJoin(F.broadcast(s))
+        .select(
+            F.col("event_type").alias("partition_value"),
+            "n_rows",
+            "n_users",
+            F.round(
+                F.col("n_rows") * 1.0 * F.col("n_parts") / F.col("total"), 6
+            ).alias("skew_factor"),
+            (F.col("n_rows") == F.col("mx")).alias("is_largest"),
         )
-        s = p.agg(
-            F.sum("n_rows").cast("bigint").alias("total"),
-            F.count(F.lit(1)).cast("bigint").alias("n_parts"),
-            F.max("n_rows").cast("bigint").alias("mx"),
-        )
-        return (
-            p.crossJoin(F.broadcast(s))
-            .select(
-                F.col("event_type").alias("partition_value"),
-                "n_rows",
-                "n_users",
-                F.round(
-                    F.col("n_rows") * 1.0 * F.col("n_parts") / F.col("total"), 6
-                ).alias("skew_factor"),
-                (F.col("n_rows") == F.col("mx")).alias("is_largest"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _CORRUPT_ORACLE = f"""
@@ -617,7 +590,8 @@ GROUP BY o_orderstatus
 
 
 @register("scan_ignore_corrupt", oracle=_CORRUPT_ORACLE, category="scan")
-def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def scan_ignore_corrupt(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Corrupt-file-tolerant landing-zone scan: a 4-bucket parquet
     layout is written, one bucket's data file is then OVERWRITTEN WITH
     GARBAGE BYTES (a torn upload / bad disk emulation), and the read
@@ -636,50 +610,43 @@ def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     normal pruned parquet scan over the surviving files.
     """
     import glob
-    import shutil
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="s3u_spark_corrupt_")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        (F.col("o_orderkey") % 4).alias("b"),
+    )
+    o.repartition(4, "b").write.mode("overwrite").partitionBy("b").parquet(
+        root
+    )
+    victims = glob.glob(f"{root}/b=3/*.parquet")
+    assert victims, "bucket 3 produced no file"
+    for v in victims:
+        with open(v, "wb") as fh:
+            fh.write(b"\x00CORRUPT" * 128)  # not a parquet footer
+
     try:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            (F.col("o_orderkey") % 4).alias("b"),
+        spark.read.parquet(root).count()
+        raise AssertionError(
+            "fail-fast read survived a corrupt file; "
+            "ignoreCorruptFiles would not be load-bearing"
         )
-        o.repartition(4, "b").write.mode("overwrite").partitionBy("b").parquet(
-            root
-        )
-        victims = glob.glob(f"{root}/b=3/*.parquet")
-        assert victims, "bucket 3 produced no file"
-        for v in victims:
-            with open(v, "wb") as fh:
-                fh.write(b"\x00CORRUPT" * 128)  # not a parquet footer
+    except Exception as exc:  # noqa: BLE001 — Spark wraps the IO error
+        if isinstance(exc, AssertionError):
+            raise
 
-        try:
-            spark.read.parquet(root).count()
-            raise AssertionError(
-                "fail-fast read survived a corrupt file; "
-                "ignoreCorruptFiles would not be load-bearing"
-            )
-        except Exception as exc:  # noqa: BLE001 — Spark wraps the IO error
-            if isinstance(exc, AssertionError):
-                raise
-
-        # NO b!=3 filter here: partition pruning would skip the corrupt
-        # file at planning time and the option would never be exercised —
-        # the scan must HIT the garbage file and recover past it.
-        back = spark.read.option("ignoreCorruptFiles", "true").parquet(root)
-        return (
-            back.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_recovered"),
-                F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-                keys_fp_col("o_orderkey").alias("keys_fp"),
-            )
-            .localCheckpoint(eager=True)
+    # NO b!=3 filter here: partition pruning would skip the corrupt
+    # file at planning time and the option would never be exercised —
+    # the scan must HIT the garbage file and recover past it.
+    back = spark.read.option("ignoreCorruptFiles", "true").parquet(root)
+    return (
+        back.groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_recovered"),
+            F.sum("o_orderkey").cast("bigint").alias("key_sum"),
+            keys_fp_col("o_orderkey").alias("keys_fp"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 _CONTRACT = (
@@ -755,7 +722,8 @@ def scan_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="source",
 )
-def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def source_xml_roundtrip(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Built-in XML data source round-trip (Spark 4 ships the former
     spark-xml connector natively, SPARK-44265): the documents catalog
     columns are written as XML (`rowTag` sharded one file per
@@ -772,36 +740,28 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every other sink here); XML earns its place for
     metadata/catalog interchange with XML-consuming systems.
     """
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="s3u_xml_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "source", "n_chars"
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
+    )
+    path = f"{tmp}/docs_xml"
+    (
+        docs.write.format("xml")
+        .option("rowTag", "doc")
+        .option("rootTag", "docs")
+        .mode("overwrite")
+        .save(path)
+    )
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "doc")
+        .schema("doc_id bigint, lang string, source string, n_chars bigint")
+        .load(path)
+    )
+    return (
+        back.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("sum_chars"),
+            F.count("source").cast("bigint").alias("n_with_source"),
         )
-        path = f"{tmp}/docs_xml"
-        (
-            docs.write.format("xml")
-            .option("rowTag", "doc")
-            .option("rootTag", "docs")
-            .mode("overwrite")
-            .save(path)
-        )
-        back = (
-            spark.read.format("xml")
-            .option("rowTag", "doc")
-            .schema("doc_id bigint, lang string, source string, n_chars bigint")
-            .load(path)
-        )
-        return (
-            back.groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("n_chars").cast("bigint").alias("sum_chars"),
-                F.count("source").cast("bigint").alias("n_with_source"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )

@@ -64,12 +64,15 @@ def get_spark(app_name: str = "snapshot-s3-util-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build the engine's canonical local session.
 
-    Defaults follow BASELINE.md's measured config; at cluster scale the
+    `cpus` defaults to `SPARK_GRAFT_CPUS`, else to the CPUs this process
+    may run on (what `nproc` prints), never a fixed slot count the host
+    may not have. Shuffle partitions follow `cpus`. At cluster scale the
     same conf set applies minus `master`, with shuffle partitions sized
     to ~2-3x total cores and `spark.sql.files.maxPartitionBytes` left at
     256m so a 100 TB scan yields ~400k well-sized input splits.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
     builder = (

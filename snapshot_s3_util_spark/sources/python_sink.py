@@ -22,7 +22,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import KEYS_FP_SQL, keys_fp_col
 
@@ -110,7 +110,8 @@ FROM orders GROUP BY o_orderstatus
 
 
 @register("sink_python_datasource", oracle=_PYSINK_ORACLE, category="sink")
-def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_python_datasource(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Write through the custom Python `DataSourceWriter` above, then
     READ THE JSONL BACK and fingerprint it — the write->read contract
     of every sink op here.  Proves the full Spark 4 Python write
@@ -123,38 +124,30 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     a Python writer trades JVM throughput for arbitrary-format reach —
     the declared custom-surface cost.
     """
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix="s3u_pysink_")
-    try:
-        spark.dataSource.register(JsonlSinkDataSource)
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus"
+    spark.dataSource.register(JsonlSinkDataSource)
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus"
+    )
+    (
+        o.repartition(4, "o_orderkey")
+        .write.format("s3u_jsonl_sink")
+        .option("path", out)
+        .mode("append")
+        .save()
+    )
+    with open(os.path.join(out, "_MANIFEST.json")) as fh:
+        manifest = json.load(fh)
+    back = spark.read.schema("o_orderkey LONG, o_orderstatus STRING").json(
+        f"{out}/part-*.jsonl"
+    )
+    assert manifest["total_rows"] == back.count(), (
+        "manifest/commit total disagrees with readable rows"
+    )
+    return (
+        back.groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum("o_orderkey").cast("bigint").alias("key_sum"),
+            keys_fp_col("o_orderkey").alias("keys_fp"),
         )
-        (
-            o.repartition(4, "o_orderkey")
-            .write.format("s3u_jsonl_sink")
-            .option("path", out)
-            .mode("append")
-            .save()
-        )
-        with open(os.path.join(out, "_MANIFEST.json")) as fh:
-            manifest = json.load(fh)
-        back = spark.read.schema("o_orderkey LONG, o_orderstatus STRING").json(
-            f"{out}/part-*.jsonl"
-        )
-        assert manifest["total_rows"] == back.count(), (
-            "manifest/commit total disagrees with readable rows"
-        )
-        return (
-            back.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum("o_orderkey").cast("bigint").alias("key_sum"),
-                keys_fp_col("o_orderkey").alias("keys_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )

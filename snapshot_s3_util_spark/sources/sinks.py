@@ -11,7 +11,9 @@ fingerprints of the read-back copy, so the driver's oracle checks the
 full write->read round trip against the source of truth. Ops that
 export `events` as a snapshot write it with `write_snapshot` and read
 it with `read_snapshot` (sources/snapshot_source.py, the one owner of
-that layout); the other sinks write their own layouts.
+that layout); the other sinks write their own layouts. The "bucket" is
+the op's scratch dir from `io.on_scratch`, which also materializes the
+read-back result before removing the dir.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sources.snapshot_source import (
     footer_key_range,
@@ -42,10 +44,6 @@ SNAPSHOT_NAME = "snap_20240201T000000"
 S3_BUCKET, S3_PREFIX = "backup-bucket", "hbase/snapshots"
 
 
-def _scratch(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"s3u_spark_{tag}_")
-
-
 @register(
     "sink_parquet_partitioned",
     oracle=f"""
@@ -55,7 +53,8 @@ def _scratch(tag: str) -> str:
     """,
     category="sink",
 )
-def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_parquet_partitioned(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Partitioned parquet export + read-back verification (A3).
 
     `write_snapshot` produces the hive layout
@@ -64,19 +63,13 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the READ-BACK copy, so a lost or duplicated row in the
     write path fails the oracle comparison.
     """
-    out = _scratch("sink")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev, out)
-        back = read_snapshot(spark, out)
-        return (
-            back.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            # materialize before the scratch dir disappears
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev, out)
+    back = read_snapshot(spark, out)
+    return (
+        back.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
 
 
 @register(
@@ -97,7 +90,8 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="hbase",
 )
-def hb_export_import_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def hb_export_import_cycle(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The reference's FULL workflow as one plan: snapshot -> export to
     the S3 layout (A2+A3) -> import by reading the copy back (A4) ->
     manifest verification of the imported data against the source (A7).
@@ -106,48 +100,43 @@ def hb_export_import_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-tripped copy — equality proves the export/import cycle
     is lossless, which is the reference's entire correctness contract.
     """
-    root = _scratch("cycle")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev, out)  # export
-        imported = read_snapshot(spark, out)  # import
-        row_md5 = row_md5_col(
-            "event_id",
-            "user_id",
-            F.round(F.col("value") * 1000000).cast("bigint"),
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev, out)  # export
+    imported = read_snapshot(spark, out)  # import
+    row_md5 = row_md5_col(
+        "event_id",
+        "user_id",
+        F.round(F.col("value") * 1000000).cast("bigint"),
+    )
+    src_fp = (
+        ev.select("event_type", row_md5.alias("h"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("src_n"),
+            digests_fp_col("h").alias("src_fp"),
         )
-        src_fp = (
-            ev.select("event_type", row_md5.alias("h"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("src_n"),
-                digests_fp_col("h").alias("src_fp"),
-            )
+    )
+    dst_fp = (
+        imported.select("event_type", row_md5.alias("h"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            digests_fp_col("h").alias("content_fp"),
         )
-        dst_fp = (
-            imported.select("event_type", row_md5.alias("h"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                digests_fp_col("h").alias("content_fp"),
-            )
+    )
+    return (
+        dst_fp.join(src_fp, "event_type", "full")
+        .select(
+            "event_type",
+            "n_rows",
+            "content_fp",
+            (
+                (F.col("n_rows") == F.col("src_n"))
+                & (F.col("content_fp") == F.col("src_fp"))
+            ).alias("verified"),
         )
-        return (
-            dst_fp.join(src_fp, "event_type", "full")
-            .select(
-                "event_type",
-                "n_rows",
-                "content_fp",
-                (
-                    (F.col("n_rows") == F.col("src_n"))
-                    & (F.col("content_fp") == F.col("src_fp"))
-                ).alias("verified"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 _N_JSONL_SHARDS = 4
@@ -166,7 +155,8 @@ _N_JSONL_SHARDS = 4
     """,
     category="sink",
 )
-def sink_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_jsonl_shards(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Sharded JSONL export — the standard LLM training-data layout
     (`shard=K/part-*.json`, one JSON document per line).
 
@@ -178,28 +168,23 @@ def sink_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet sinks. At scale: one narrow write pass, shard dirs are
     independent units for downstream loaders.
     """
-    out = _scratch("jsonl")
-    try:
-        d = load_table(spark, sf_dir, "documents")
-        (
-            d.select("doc_id", "text", "lang", (F.col("doc_id") % _N_JSONL_SHARDS).alias("shard"))
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .json(out)
+    d = load_table(spark, sf_dir, "documents")
+    (
+        d.select("doc_id", "text", "lang", (F.col("doc_id") % _N_JSONL_SHARDS).alias("shard"))
+        .write.mode("overwrite")
+        .partitionBy("shard")
+        .json(out)
+    )
+    back = spark.read.schema("doc_id LONG, text STRING, lang STRING, shard INT").json(out)
+    row_md5 = row_md5_col("doc_id", "text", "lang")
+    return (
+        back.select(F.col("shard").cast("bigint").alias("shard"), row_md5.alias("h"))
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            digests_fp_col("h").alias("content_fp"),
         )
-        back = spark.read.schema("doc_id LONG, text STRING, lang STRING, shard INT").json(out)
-        row_md5 = row_md5_col("doc_id", "text", "lang")
-        return (
-            back.select(F.col("shard").cast("bigint").alias("shard"), row_md5.alias("h"))
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                digests_fp_col("h").alias("content_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 @register(
@@ -213,7 +198,8 @@ def sink_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="sink",
 )
-def sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_sorted_layout(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Clustered export: partition by event_type, ts-sorted WITHIN each
     partition file — the layout that makes time-range reads cheap.
 
@@ -227,24 +213,19 @@ def sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     time predicate, so both the layout round-trip and the pruned read
     are what the oracle checks.
     """
-    out = _scratch("sorted")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev.repartition("event_type").sortWithinPartitions("ts"), out)
-        back = read_snapshot(spark, out).filter(
-            F.col("ts") >= F.lit("2024-01-15 00:00:00").cast("timestamp")
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev.repartition("event_type").sortWithinPartitions("ts"), out)
+    back = read_snapshot(spark, out).filter(
+        F.col("ts") >= F.lit("2024-01-15 00:00:00").cast("timestamp")
+    )
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("ts").alias("min_ts"),
+            F.max("ts").alias("max_ts"),
         )
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _restore_counter = 0
@@ -274,7 +255,8 @@ def hb_restore_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _restore_counter
     _restore_counter += 1
     tbl = f"s3u_restored_events_{_restore_counter}"
-    root = _scratch("restore")
+    # not io.on_scratch: the catalog table must outlive the checkpoint
+    root = tempfile.mkdtemp(prefix="s3u_hb_restore_catalog_")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
     try:
         ev = load_table(spark, sf_dir, "events")
@@ -309,7 +291,8 @@ def hb_restore_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="source",
 )
-def source_hbase_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def source_hbase_snapshot(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Round trip through the snapshot reader (A3 -> A4).
 
     Exports a snapshot, then reads it back with `read_snapshot` under
@@ -318,22 +301,17 @@ def source_hbase_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks the pruned read against the source of truth. See
     sources/snapshot_source.py for the planning notes.
     """
-    root = _scratch("snapsrc")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev, out)
-        back = read_snapshot(spark, out, partitions={"click", "purchase"})
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("user_id").cast("bigint").alias("sum_user"),
-            )
-            .localCheckpoint(eager=True)
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev, out)
+    back = read_snapshot(spark, out, partitions={"click", "purchase"})
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("user_id").cast("bigint").alias("sum_user"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 # Inclusive rowkey scan range for source_snapshot_keyrange — sized to
@@ -356,7 +334,8 @@ _SNAP_KR_LO, _SNAP_KR_HI = 150, 449
     """,
     category="source",
 )
-def source_snapshot_keyrange(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def source_snapshot_keyrange(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Rowkey-range read through the snapshot reader — the
     `Scan(startRow, stopRow)` path of the production bridge (SURVEY §4;
     TableSnapshotInputFormat skips regions outside the scan range).
@@ -370,26 +349,21 @@ def source_snapshot_keyrange(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-group filter. The oracle checks the pruned read against the
     source of truth over the full key domain.
     """
-    root = _scratch("snapkr")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(
-            ev.repartitionByRange(8, "event_id").sortWithinPartitions("event_id"),
-            out,
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(
+        ev.repartitionByRange(8, "event_id").sortWithinPartitions("event_id"),
+        out,
+    )
+    back = read_snapshot(spark, out, key_range=(_SNAP_KR_LO, _SNAP_KR_HI))
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("event_id").cast("bigint").alias("min_key"),
+            F.max("event_id").cast("bigint").alias("max_key"),
         )
-        back = read_snapshot(spark, out, key_range=(_SNAP_KR_LO, _SNAP_KR_HI))
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("event_id").cast("bigint").alias("min_key"),
-                F.max("event_id").cast("bigint").alias("max_key"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 # Region count for the faithful snapshot layout below — fixed and
@@ -432,7 +406,10 @@ _LAYOUT_REGIONS = 4
     """,
     category="hbase",
 )
-def hb_snapshot_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def hb_snapshot_layout_roundtrip(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """A2→A4 round trip through a FAITHFUL on-disk snapshot layout
     (r10 verdict ask #8): the create side writes the reference's
     directory shape —
@@ -469,89 +446,84 @@ def hb_snapshot_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as _pq
 
-    root = _scratch("snaplayout")
     snapdir = os.path.join(root, "hbase", ".hbase-snapshot", SNAPSHOT_NAME)
     archive = os.path.join(root, "hbase", "archive", "data", "default", "events")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        mx = ev.agg(F.max("event_id")).collect()[0][0]
-        rs = (mx or 0) // _LAYOUT_REGIONS + 1
-        # ---- A2: create snapshot (archive files + manifest) ----
-        (
-            ev.withColumn(
-                "region", F.floor(F.col("event_id") / F.lit(rs)).cast("bigint")
-            )
-            .repartition("region")
-            .write.mode("overwrite")
-            .partitionBy("region")
-            .parquet(archive)
+    ev = load_table(spark, sf_dir, "events")
+    mx = ev.agg(F.max("event_id")).collect()[0][0]
+    rs = (mx or 0) // _LAYOUT_REGIONS + 1
+    # ---- A2: create snapshot (archive files + manifest) ----
+    (
+        ev.withColumn(
+            "region", F.floor(F.col("event_id") / F.lit(rs)).cast("bigint")
         )
-        entries = []
-        for d in sorted(_glob.glob(os.path.join(archive, "region=*"))):
-            region = os.path.basename(d).split("=", 1)[1]
-            for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
-                md = _pq.read_metadata(f)
-                # an unbounded footer is recorded as NULL bounds
-                kmin, kmax = footer_key_range(md) or (None, None)
-                entries.append(
-                    {
-                        "region": region,
-                        "family": "d",
-                        "path": os.path.relpath(f, root),
-                        "bytes": os.path.getsize(f),
-                        "rows": md.num_rows,
-                        "min_key": kmin,
-                        "max_key": kmax,
-                    }
-                )
-        os.makedirs(snapdir, exist_ok=True)
-        with open(os.path.join(snapdir, "data.manifest"), "w") as fh:
-            for ent in entries:
-                fh.write(_json.dumps(ent) + "\n")
-        with open(os.path.join(snapdir, ".snapshotinfo"), "w") as fh:
-            _json.dump(
-                {"name": SNAPSHOT_NAME, "table": "default:events",
-                 "type": "FLUSH", "version": 2},
-                fh,
+        .repartition("region")
+        .write.mode("overwrite")
+        .partitionBy("region")
+        .parquet(archive)
+    )
+    entries = []
+    for d in sorted(_glob.glob(os.path.join(archive, "region=*"))):
+        region = os.path.basename(d).split("=", 1)[1]
+        for f in sorted(_glob.glob(os.path.join(d, "*.parquet"))):
+            md = _pq.read_metadata(f)
+            # an unbounded footer is recorded as NULL bounds
+            kmin, kmax = footer_key_range(md) or (None, None)
+            entries.append(
+                {
+                    "region": region,
+                    "family": "d",
+                    "path": os.path.relpath(f, root),
+                    "bytes": os.path.getsize(f),
+                    "rows": md.num_rows,
+                    "min_key": kmin,
+                    "max_key": kmax,
+                }
             )
-        # ---- A4: restore, planning from the manifest alone ----
-        with open(os.path.join(snapdir, "data.manifest")) as fh:
-            listed = [_json.loads(line) for line in fh]
-        manifest_ok = all(
-            os.path.exists(os.path.join(root, ent["path"]))
-            and os.path.getsize(os.path.join(root, ent["path"])) == ent["bytes"]
-            for ent in listed
+    os.makedirs(snapdir, exist_ok=True)
+    with open(os.path.join(snapdir, "data.manifest"), "w") as fh:
+        for ent in entries:
+            fh.write(_json.dumps(ent) + "\n")
+    with open(os.path.join(snapdir, ".snapshotinfo"), "w") as fh:
+        _json.dump(
+            {"name": SNAPSHOT_NAME, "table": "default:events",
+             "type": "FLUSH", "version": 2},
+            fh,
         )
-        planned = [
-            ent
-            for ent in listed
-            if ent["min_key"] is not None
-            and ent["max_key"] >= _SNAP_KR_LO
-            and ent["min_key"] <= _SNAP_KR_HI
-        ]
-        if planned:
-            back = spark.read.parquet(
-                *[os.path.join(root, ent["path"]) for ent in planned]
-            )
-        else:
-            # every store file pruned (a scan range outside the key
-            # domain): zero planned splits is a valid plan, not an
-            # error — mirror an empty read
-            back = spark.createDataFrame([], ev.schema)
-        back = back.filter(F.col("event_id").between(_SNAP_KR_LO, _SNAP_KR_HI))
-        return (
-            back.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("user_id").cast("bigint").alias("sum_user"),
-            )
-            .withColumn("n_files_total", F.lit(len(listed)).cast("bigint"))
-            .withColumn("n_files_planned", F.lit(len(planned)).cast("bigint"))
-            .withColumn("manifest_ok", F.lit(manifest_ok))
-            .localCheckpoint(eager=True)
+    # ---- A4: restore, planning from the manifest alone ----
+    with open(os.path.join(snapdir, "data.manifest")) as fh:
+        listed = [_json.loads(line) for line in fh]
+    manifest_ok = all(
+        os.path.exists(os.path.join(root, ent["path"]))
+        and os.path.getsize(os.path.join(root, ent["path"])) == ent["bytes"]
+        for ent in listed
+    )
+    planned = [
+        ent
+        for ent in listed
+        if ent["min_key"] is not None
+        and ent["max_key"] >= _SNAP_KR_LO
+        and ent["min_key"] <= _SNAP_KR_HI
+    ]
+    if planned:
+        back = spark.read.parquet(
+            *[os.path.join(root, ent["path"]) for ent in planned]
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    else:
+        # every store file pruned (a scan range outside the key
+        # domain): zero planned splits is a valid plan, not an
+        # error — mirror an empty read
+        back = spark.createDataFrame([], ev.schema)
+    back = back.filter(F.col("event_id").between(_SNAP_KR_LO, _SNAP_KR_HI))
+    return (
+        back.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("user_id").cast("bigint").alias("sum_user"),
+        )
+        .withColumn("n_files_total", F.lit(len(listed)).cast("bigint"))
+        .withColumn("n_files_planned", F.lit(len(planned)).cast("bigint"))
+        .withColumn("manifest_ok", F.lit(manifest_ok))
+    )
 
 
 @register(
@@ -565,33 +537,29 @@ def hb_snapshot_layout_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="sink",
 )
-def sink_s3_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_s3_layout(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """S3 object-layout emulation (A3's `.hbase-snapshot/<name>/...`).
 
     Writes the snapshot under `<bucket>/<prefix>/<snapshot_name>/` and
     returns the logical object prefixes with read-back row counts — the
     manifest a restore (A4) would consume.
     """
-    root = _scratch("s3emu")
     out = os.path.join(root, S3_BUCKET, S3_PREFIX, SNAPSHOT_NAME)
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        write_snapshot(ev, out)
-        back = read_snapshot(spark, out)
-        return (
-            back.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .select(
-                F.concat(
-                    F.lit(f"s3emu://{S3_BUCKET}/{S3_PREFIX}/{SNAPSHOT_NAME}/event_type="),
-                    F.col("event_type"),
-                ).alias("object_prefix"),
-                "n_rows",
-            )
-            .localCheckpoint(eager=True)
+    ev = load_table(spark, sf_dir, "events")
+    write_snapshot(ev, out)
+    back = read_snapshot(spark, out)
+    return (
+        back.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .select(
+            F.concat(
+                F.lit(f"s3emu://{S3_BUCKET}/{S3_PREFIX}/{SNAPSHOT_NAME}/event_type="),
+                F.col("event_type"),
+            ).alias("object_prefix"),
+            "n_rows",
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 _COMPACT_SMALL_FILES = 64
@@ -610,7 +578,8 @@ _COMPACT_TARGET_FILES = 4
     """,
     category="sink",
 )
-def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_compaction(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Small-file compaction: {_COMPACT_SMALL_FILES} ingest shards
     rewritten as {_COMPACT_TARGET_FILES} right-sized files, losslessly.
 
@@ -624,37 +593,32 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     content fingerprint of the compacted copy against the source, so a
     row lost/duplicated by the rewrite fails the comparison.
     """
-    root = _scratch("compact")
     small, compacted = f"{root}/small", f"{root}/compacted"
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        ev.repartition(_COMPACT_SMALL_FILES).write.mode("overwrite").parquet(small)
-        (
-            spark.read.parquet(small)
-            .coalesce(_COMPACT_TARGET_FILES)
-            .write.mode("overwrite")
-            .parquet(compacted)
+    ev = load_table(spark, sf_dir, "events")
+    ev.repartition(_COMPACT_SMALL_FILES).write.mode("overwrite").parquet(small)
+    (
+        spark.read.parquet(small)
+        .coalesce(_COMPACT_TARGET_FILES)
+        .write.mode("overwrite")
+        .parquet(compacted)
+    )
+    n_files = len(
+        [f for f in os.listdir(compacted) if f.endswith(".parquet")]
+    )
+    back = spark.read.parquet(compacted)
+    row_md5 = row_md5_col("event_id", "user_id")
+    return (
+        back.select(row_md5.alias("h"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            digests_fp_col("h").alias("content_fp"),
         )
-        n_files = len(
-            [f for f in os.listdir(compacted) if f.endswith(".parquet")]
+        .select(
+            F.lit(n_files).cast("bigint").alias("n_files_after"),
+            "n_rows",
+            "content_fp",
         )
-        back = spark.read.parquet(compacted)
-        row_md5 = row_md5_col("event_id", "user_id")
-        return (
-            back.select(row_md5.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                digests_fp_col("h").alias("content_fp"),
-            )
-            .select(
-                F.lit(n_files).cast("bigint").alias("n_files_after"),
-                "n_rows",
-                "content_fp",
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 # Partitions rewritten by the second (incremental) run; the filter the
@@ -679,7 +643,10 @@ GROUP BY lang
 
 
 @register("sink_partition_overwrite", oracle=_POVR_ORACLE, category="sink")
-def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_partition_overwrite(
+    spark: SparkSession, sf_dir: str, out: str
+) -> DataFrame:
     """Dynamic partition overwrite: the incremental re-export primitive.
 
     Run 1 exports the full corpus partitioned by lang.  Run 2 re-curates
@@ -693,38 +660,28 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     directions: overwritten partitions carry the curated subset,
     untouched partitions carry their original bytes.
     """
-    out = _scratch("povr")
+    d = load_table(spark, sf_dir, "documents")
+    d.write.mode("overwrite").partitionBy("lang").parquet(out)
+    updated = d.filter(
+        F.col("lang").isin(*_POVR_LANGS)
+        & (F.col("n_chars") >= _POVR_MIN_CHARS)
+    )
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(mode_key, "STATIC")
+    spark.conf.set(mode_key, "dynamic")
     try:
-        d = load_table(spark, sf_dir, "documents")
-        d.write.mode("overwrite").partitionBy("lang").parquet(out)
-        updated = d.filter(
-            F.col("lang").isin(*_POVR_LANGS)
-            & (F.col("n_chars") >= _POVR_MIN_CHARS)
-        )
-        spark.conf.set(mode_key, "dynamic")
         updated.write.mode("overwrite").partitionBy("lang").parquet(out)
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.array_sort(
-                            F.collect_list(F.col("doc_id").cast("string"))
-                        ),
-                    )
-                ).alias("content_fp"),
-            )
-            # materialize before the scratch dir disappears
-            .localCheckpoint(eager=True)
-        )
     finally:
         spark.conf.set(mode_key, before)
-        shutil.rmtree(out, ignore_errors=True)
+    return spark.read.parquet(out).groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.md5(
+            F.concat_ws(
+                ",",
+                F.array_sort(F.collect_list(F.col("doc_id").cast("string"))),
+            )
+        ).alias("content_fp"),
+    )
 
 
 _OBS_ORACLE = f"""
@@ -738,7 +695,8 @@ FROM {EVENTS_REL} e
 
 
 @register("sink_observed_export", oracle=_OBS_ORACLE, category="sink")
-def sink_observed_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_observed_export(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Export with in-flight data-quality metrics via `Observation`.
 
     `df.observe()` piggybacks accumulator-backed aggregates on the
@@ -752,32 +710,28 @@ def sink_observed_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Observation
 
-    out = _scratch("obs")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        obs = Observation("export_metrics")
-        observed = ev.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("s"),
-            F.count_if(F.col("event_type") == "error").alias("e"),
-        )
-        observed.write.mode("overwrite").parquet(out)
-        m = obs.get  # blocks until the write action completes
-        n_back = spark.read.parquet(out).count()
-        return spark.createDataFrame(
-            [
-                (
-                    int(m["n"]),
-                    round(float(m["s"]), 4),
-                    int(m["e"]),
-                    n_back == m["n"],
-                )
-            ],
-            "n_rows bigint, sum_value double, n_errors bigint, verified boolean",
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events")
+    obs = Observation("export_metrics")
+    observed = ev.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum("value").alias("s"),
+        F.count_if(F.col("event_type") == "error").alias("e"),
+    )
+    observed.write.mode("overwrite").parquet(out)
+    m = obs.get  # blocks until the write action completes
+    n_back = spark.read.parquet(out).count()
+    return spark.createDataFrame(
+        [
+            (
+                int(m["n"]),
+                round(float(m["s"]), 4),
+                int(m["e"]),
+                n_back == m["n"],
+            )
+        ],
+        "n_rows bigint, sum_value double, n_errors bigint, verified boolean",
+    )
 
 
 _Z_DIM_BITS = 5          # bits per clustering dimension
@@ -816,7 +770,8 @@ GROUP BY 1
 
 
 @register("sink_zorder_layout", oracle=_Z_ORACLE, category="sink")
-def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_zorder_layout(spark: SparkSession, sf_dir: str, out: str) -> DataFrame:
     """Z-order clustered export: interleave the bits of two query
     dimensions (user group, day-of-month) and partition the written
     files by Z-tile — the multi-dimensional layout (Delta
@@ -835,35 +790,30 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from READING THE EXPORT BACK, so layout + round-trip are
     what the oracle checks.
     """
-    out = _scratch("zorder")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        z = _z_interleave_sql("(user_id % 32)", "day(ts)")
-        (
-            ev.withColumn(
-                "zbucket",
-                F.expr(f"{z} >> {_Z_BUCKET_SHIFT}").cast("bigint"),
-            )
-            .repartition("zbucket")
-            .write.mode("overwrite")
-            .partitionBy("zbucket")
-            .parquet(out)
+    ev = load_table(spark, sf_dir, "events")
+    z = _z_interleave_sql("(user_id % 32)", "day(ts)")
+    (
+        ev.withColumn(
+            "zbucket",
+            F.expr(f"{z} >> {_Z_BUCKET_SHIFT}").cast("bigint"),
         )
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy(F.col("zbucket").cast("bigint").alias("zbucket"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min(F.col("user_id") % 32).cast("bigint").alias("u_lo"),
-                F.max(F.col("user_id") % 32).cast("bigint").alias("u_hi"),
-                F.min(F.dayofmonth("ts")).cast("bigint").alias("d_lo"),
-                F.max(F.dayofmonth("ts")).cast("bigint").alias("d_hi"),
-                F.round(F.sum("value"), 4).alias("sum_value"),
-            )
-            .localCheckpoint(eager=True)
+        .repartition("zbucket")
+        .write.mode("overwrite")
+        .partitionBy("zbucket")
+        .parquet(out)
+    )
+    back = spark.read.parquet(out)
+    return (
+        back.groupBy(F.col("zbucket").cast("bigint").alias("zbucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min(F.col("user_id") % 32).cast("bigint").alias("u_lo"),
+            F.max(F.col("user_id") % 32).cast("bigint").alias("u_hi"),
+            F.min(F.dayofmonth("ts")).cast("bigint").alias("d_lo"),
+            F.max(F.dayofmonth("ts")).cast("bigint").alias("d_hi"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    )
 
 
 _TT_SPLIT = "2024-01-20 00:00:00"  # v1 snapshot covers events before this
@@ -897,7 +847,8 @@ def _tt_version_sql(where: str) -> str:
     """,
     category="hbase",
 )
-def hb_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def hb_time_travel_read(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Snapshot time travel: read a versioned table AS OF each retained
     snapshot version, resolved through a manifest (A2's versioned
     snapshots are exactly an Iceberg/Delta-style version history).
@@ -914,62 +865,57 @@ def hb_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     place, a version read is an O(1) manifest lookup + plain scan, and
     version diffs (`join_anti` on keys) never touch live writers.
     """
-    root = _scratch("timetravel")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        from pyspark.sql import Window
+    ev = load_table(spark, sf_dir, "events")
+    from pyspark.sql import Window
 
-        def _state(df):
-            w = Window.partitionBy("user_id").orderBy(
-                F.desc("ts"), F.desc("event_id")
-            )
-            return (
-                df.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("user_id", "event_id", "ts", "value")
-            )
-
-        split = F.lit(_TT_SPLIT).cast("timestamp")
-        versions = {
-            1: _state(ev.filter(F.col("ts") < split)),
-            2: _state(ev),
-        }
-        manifest_rows = []
-        for v, df in versions.items():
-            df.write.mode("overwrite").parquet(f"{root}/v{v}")
-            manifest_rows.append((v, f"{root}/v{v}", df.count()))
-        spark.createDataFrame(
-            manifest_rows, "version bigint, path string, n_rows bigint"
-        ).write.mode("overwrite").parquet(f"{root}/_manifest")
-
-        manifest = spark.read.parquet(f"{root}/_manifest")
-        row_md5 = row_md5_col("user_id", "event_id")
-        back = None
-        for v in versions:
-            vb = (
-                spark.read.parquet(f"{root}/v{v}")
-                .select(
-                    F.lit(v).cast("bigint").alias("version"),
-                    row_md5.alias("h"),
-                )
-            )
-            back = vb if back is None else back.unionByName(vb)
-        per_version = back.groupBy("version").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_keys"),
-            digests_fp_col("h").alias("content_fp"),
+    def _state(df):
+        w = Window.partitionBy("user_id").orderBy(
+            F.desc("ts"), F.desc("event_id")
         )
         return (
-            per_version.join(F.broadcast(manifest), "version")
-            .select(
-                "version",
-                "n_keys",
-                "content_fp",
-                (F.col("n_keys") == F.col("n_rows")).alias("manifest_ok"),
-            )
-            .localCheckpoint(eager=True)
+            df.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("user_id", "event_id", "ts", "value")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    split = F.lit(_TT_SPLIT).cast("timestamp")
+    versions = {
+        1: _state(ev.filter(F.col("ts") < split)),
+        2: _state(ev),
+    }
+    manifest_rows = []
+    for v, df in versions.items():
+        df.write.mode("overwrite").parquet(f"{root}/v{v}")
+        manifest_rows.append((v, f"{root}/v{v}", df.count()))
+    spark.createDataFrame(
+        manifest_rows, "version bigint, path string, n_rows bigint"
+    ).write.mode("overwrite").parquet(f"{root}/_manifest")
+
+    manifest = spark.read.parquet(f"{root}/_manifest")
+    row_md5 = row_md5_col("user_id", "event_id")
+    back = None
+    for v in versions:
+        vb = (
+            spark.read.parquet(f"{root}/v{v}")
+            .select(
+                F.lit(v).cast("bigint").alias("version"),
+                row_md5.alias("h"),
+            )
+        )
+        back = vb if back is None else back.unionByName(vb)
+    per_version = back.groupBy("version").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_keys"),
+        digests_fp_col("h").alias("content_fp"),
+    )
+    return (
+        per_version.join(F.broadcast(manifest), "version")
+        .select(
+            "version",
+            "n_keys",
+            "content_fp",
+            (F.col("n_keys") == F.col("n_rows")).alias("manifest_ok"),
+        )
+    )
 
 
 _FMT_LIST = ("parquet", "orc", "json", "csv")
@@ -994,7 +940,8 @@ _FMT_FP_SQL = f"""
     """,
     category="sink",
 )
-def sink_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_format_matrix(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Every interchange format round-trips losslessly: the same frame
     written as parquet, ORC, JSON-lines and CSV, each read back and
     content-fingerprinted against the source.
@@ -1012,54 +959,49 @@ def sink_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected fingerprint from the source, so a row lost or a value
     re-encoded by ANY format fails the comparison.
     """
-    root = _scratch("fmtmatrix")
-    try:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_micros("ts").alias("us"),
+    )
+    schema = "event_id bigint, user_id bigint, event_type string, us bigint"
+    row_md5 = row_md5_col("event_id", "user_id", "event_type", "us")
+    src_fp = ev.select(row_md5.alias("h")).agg(
+        F.count(F.lit(1)).alias("src_rows"),
+        digests_fp_col("h").alias("src_fp"),
+    )
+    per_fmt = None
+    for fmt in _FMT_LIST:
+        path = f"{root}/{fmt}"
+        w = ev.write.mode("overwrite").format(fmt)
+        if fmt == "csv":
+            w = w.option("header", "true")
+        w.save(path)
+        r = spark.read.format(fmt)
+        if fmt in ("json", "csv"):
+            r = r.schema(schema)
+        if fmt == "csv":
+            r = r.option("header", "true")
+        back = r.load(path)
+        fp = back.select(row_md5.alias("h")).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            digests_fp_col("h").alias("content_fp"),
+        ).select(F.lit(fmt).alias("fmt"), "n_rows", "content_fp")
+        per_fmt = fp if per_fmt is None else per_fmt.unionByName(fp)
+    return (
+        per_fmt.crossJoin(F.broadcast(src_fp))
+        .select(
+            "fmt",
+            "n_rows",
+            "content_fp",
+            (
+                (F.col("n_rows") == F.col("src_rows"))
+                & (F.col("content_fp") == F.col("src_fp"))
+            ).alias("matches_source"),
         )
-        schema = "event_id bigint, user_id bigint, event_type string, us bigint"
-        row_md5 = row_md5_col("event_id", "user_id", "event_type", "us")
-        src_fp = ev.select(row_md5.alias("h")).agg(
-            F.count(F.lit(1)).alias("src_rows"),
-            digests_fp_col("h").alias("src_fp"),
-        )
-        per_fmt = None
-        for fmt in _FMT_LIST:
-            path = f"{root}/{fmt}"
-            w = ev.write.mode("overwrite").format(fmt)
-            if fmt == "csv":
-                w = w.option("header", "true")
-            w.save(path)
-            r = spark.read.format(fmt)
-            if fmt in ("json", "csv"):
-                r = r.schema(schema)
-            if fmt == "csv":
-                r = r.option("header", "true")
-            back = r.load(path)
-            fp = back.select(row_md5.alias("h")).agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                digests_fp_col("h").alias("content_fp"),
-            ).select(F.lit(fmt).alias("fmt"), "n_rows", "content_fp")
-            per_fmt = fp if per_fmt is None else per_fmt.unionByName(fp)
-        return (
-            per_fmt.crossJoin(F.broadcast(src_fp))
-            .select(
-                "fmt",
-                "n_rows",
-                "content_fp",
-                (
-                    (F.col("n_rows") == F.col("src_rows"))
-                    & (F.col("content_fp") == F.col("src_fp"))
-                ).alias("matches_source"),
-            )
-            .orderBy("fmt")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        .orderBy("fmt")
+    )
 
 
 _MERGE_ORACLE = """
@@ -1096,7 +1038,8 @@ GROUP BY action
 
 
 @register("sink_merge_upsert", oracle=_MERGE_ORACLE, category="sink")
-def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_merge_upsert(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """MERGE INTO (upsert + delete) against a parquet-backed table —
     the lakehouse write primitive: a change batch updates matched
     keys, inserts new ones, and applies tombstone deletes, producing
@@ -1114,74 +1057,69 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a bucketed base layout (`join_bucketed_colocated`) even that
     exchange drops to a co-located zip.
     """
-    root = _scratch("merge")
-    try:
-        c = load_table(spark, sf_dir, "customer")
-        base = c.filter(F.col("c_custkey") % 2 == 0).select(
-            F.col("c_custkey").alias("k"),
-            F.col("c_name").alias("name"),
-            F.col("c_acctbal").alias("bal"),
-        )
-        base.write.mode("overwrite").parquet(f"{root}/v0")
+    c = load_table(spark, sf_dir, "customer")
+    base = c.filter(F.col("c_custkey") % 2 == 0).select(
+        F.col("c_custkey").alias("k"),
+        F.col("c_name").alias("name"),
+        F.col("c_acctbal").alias("bal"),
+    )
+    base.write.mode("overwrite").parquet(f"{root}/v0")
 
-        changes = c.filter(F.col("c_custkey") % 3 == 0).select(
-            F.col("c_custkey").alias("k"),
-            F.col("c_name").alias("name"),
-            F.when(
-                F.col("c_custkey") % 2 == 0, F.col("c_acctbal") + 100.0
-            )
-            .otherwise(F.col("c_acctbal"))
-            .alias("bal"),
-            (F.col("c_custkey") % 10 == 4).alias("tomb"),
+    changes = c.filter(F.col("c_custkey") % 3 == 0).select(
+        F.col("c_custkey").alias("k"),
+        F.col("c_name").alias("name"),
+        F.when(
+            F.col("c_custkey") % 2 == 0, F.col("c_acctbal") + 100.0
         )
+        .otherwise(F.col("c_acctbal"))
+        .alias("bal"),
+        (F.col("c_custkey") % 10 == 4).alias("tomb"),
+    )
 
-        b = spark.read.parquet(f"{root}/v0")
-        ch = changes
-        merged = (
-            b.alias("b")
-            .join(ch.alias("ch"), F.col("b.k") == F.col("ch.k"), "full")
-            .filter(
-                F.col("ch.tomb").isNull() | ~F.col("ch.tomb")
-            )
-            .select(
-                F.coalesce(F.col("ch.k"), F.col("b.k")).alias("k"),
-                F.coalesce(F.col("ch.name"), F.col("b.name")).alias("name"),
-                F.coalesce(F.col("ch.bal"), F.col("b.bal")).alias("bal"),
-                F.when(F.col("ch.k").isNull(), "kept")
-                .when(F.col("b.k").isNull(), "inserted")
-                .otherwise("updated")
-                .alias("action"),
-            )
+    b = spark.read.parquet(f"{root}/v0")
+    ch = changes
+    merged = (
+        b.alias("b")
+        .join(ch.alias("ch"), F.col("b.k") == F.col("ch.k"), "full")
+        .filter(
+            F.col("ch.tomb").isNull() | ~F.col("ch.tomb")
         )
-        merged.write.mode("overwrite").parquet(f"{root}/v1")
+        .select(
+            F.coalesce(F.col("ch.k"), F.col("b.k")).alias("k"),
+            F.coalesce(F.col("ch.name"), F.col("b.name")).alias("name"),
+            F.coalesce(F.col("ch.bal"), F.col("b.bal")).alias("bal"),
+            F.when(F.col("ch.k").isNull(), "kept")
+            .when(F.col("b.k").isNull(), "inserted")
+            .otherwise("updated")
+            .alias("action"),
+        )
+    )
+    merged.write.mode("overwrite").parquet(f"{root}/v1")
 
-        back = spark.read.parquet(f"{root}/v1")
-        row_str = F.concat_ws(
-            "|",
-            F.col("k").cast("string"),
-            F.col("name"),
-            F.round(F.col("bal"), 2).cast("string"),
+    back = spark.read.parquet(f"{root}/v1")
+    row_str = F.concat_ws(
+        "|",
+        F.col("k").cast("string"),
+        F.col("name"),
+        F.round(F.col("bal"), 2).cast("string"),
+    )
+    return (
+        back.select("action", "k", "bal", row_str.alias("r"))
+        .groupBy("action")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(F.sum("bal"), 2).alias("sum_bal"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.expr(
+                        "transform(array_sort(collect_list("
+                        "  struct(k, r))), x -> x.r)"
+                    ),
+                )
+            ).alias("content_fp"),
         )
-        return (
-            back.select("action", "k", "bal", row_str.alias("r"))
-            .groupBy("action")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.round(F.sum("bal"), 2).alias("sum_bal"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.expr(
-                            "transform(array_sort(collect_list("
-                            "  struct(k, r))), x -> x.r)"
-                        ),
-                    )
-                ).alias("content_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
 
 
 _WAP_ORACLE = f"""
@@ -1202,7 +1140,8 @@ FROM counts
 
 
 @register("sink_manifest_wap", oracle=_WAP_ORACLE, category="sink")
-def sink_manifest_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_manifest_wap(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Write-Audit-Publish: writers land files, an AUDIT verifies
     counts against the manifest, and readers resolve ONLY through the
     published manifest — so a failed writer's half-landed files (the
@@ -1220,54 +1159,50 @@ def sink_manifest_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the manifest — never a directory glob, the 100 TB correctness
     rule this op exists to demonstrate.
     """
-    root = _scratch("wap")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        groups = {
-            "f0": ev.filter(F.col("event_id") % 3 == 0),
-            "f1": ev.filter(F.col("event_id") % 3 == 1),
-        }
-        manifest_rows = []
-        for fid, df in groups.items():
-            df.write.mode("overwrite").parquet(f"{root}/data/{fid}")
-            manifest_rows.append((fid, df.count()))
-        # the failed writer: files on disk, absent from the manifest
-        ev.filter(F.col("event_id") % 3 == 2).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/data/f_orphan")
-        manifest = spark.createDataFrame(
-            manifest_rows, "file_id string, manifest_rows long"
-        )
-        manifest.write.mode("overwrite").parquet(f"{root}/_manifest")
+    ev = load_table(spark, sf_dir, "events")
+    groups = {
+        "f0": ev.filter(F.col("event_id") % 3 == 0),
+        "f1": ev.filter(F.col("event_id") % 3 == 1),
+    }
+    manifest_rows = []
+    for fid, df in groups.items():
+        df.write.mode("overwrite").parquet(f"{root}/data/{fid}")
+        manifest_rows.append((fid, df.count()))
+    # the failed writer: files on disk, absent from the manifest
+    ev.filter(F.col("event_id") % 3 == 2).write.mode(
+        "overwrite"
+    ).parquet(f"{root}/data/f_orphan")
+    manifest = spark.createDataFrame(
+        manifest_rows, "file_id string, manifest_rows long"
+    )
+    manifest.write.mode("overwrite").parquet(f"{root}/_manifest")
 
-        # Audit: per-file read-back counts vs the PUBLISHED manifest,
-        # resolved by join (no driver-side row loop; the known file-id
-        # set is the op's own static publish set, exactly as Spark's
-        # file index is driver-side planning state).
-        published = spark.read.parquet(f"{root}/_manifest")
-        read_back = None
-        for fid in groups:
-            c = (
-                spark.read.parquet(f"{root}/data/{fid}")
-                .agg(F.count(F.lit(1)).alias("n_rows"))
-                .select(F.lit(fid).alias("file_id"), "n_rows")
-            )
-            read_back = c if read_back is None else read_back.unionByName(c)
-        audited = read_back.join(published, "file_id").select(
-            "file_id",
-            "n_rows",
-            "manifest_rows",
-            (F.col("n_rows") == F.col("manifest_rows")).alias("audit_ok"),
+    # Audit: per-file read-back counts vs the PUBLISHED manifest,
+    # resolved by join (no driver-side row loop; the known file-id
+    # set is the op's own static publish set, exactly as Spark's
+    # file index is driver-side planning state).
+    published = spark.read.parquet(f"{root}/_manifest")
+    read_back = None
+    for fid in groups:
+        c = (
+            spark.read.parquet(f"{root}/data/{fid}")
+            .agg(F.count(F.lit(1)).alias("n_rows"))
+            .select(F.lit(fid).alias("file_id"), "n_rows")
         )
-        total = audited.agg(
-            F.lit("TOTAL").alias("file_id"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("manifest_rows").alias("manifest_rows"),
-            (F.sum("n_rows") == F.sum("manifest_rows")).alias("audit_ok"),
-        )
-        return audited.unionByName(total).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        read_back = c if read_back is None else read_back.unionByName(c)
+    audited = read_back.join(published, "file_id").select(
+        "file_id",
+        "n_rows",
+        "manifest_rows",
+        (F.col("n_rows") == F.col("manifest_rows")).alias("audit_ok"),
+    )
+    total = audited.agg(
+        F.lit("TOTAL").alias("file_id"),
+        F.sum("n_rows").alias("n_rows"),
+        F.sum("manifest_rows").alias("manifest_rows"),
+        (F.sum("n_rows") == F.sum("manifest_rows")).alias("audit_ok"),
+    )
+    return audited.unionByName(total)
 
 
 _CODECS = ("snappy", "gzip", "zstd")
@@ -1289,7 +1224,8 @@ FROM codecs c, fp f
 
 
 @register("sink_compression_matrix", oracle=_CODEC_ORACLE, category="sink")
-def sink_compression_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def sink_compression_matrix(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Compression-codec round-trip matrix: the same table written as
     parquet under snappy / gzip / zstd, each READ BACK and content-
     fingerprinted against the source — codec choice is a first-order
@@ -1308,7 +1244,6 @@ def sink_compression_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: four independent narrow writes + three pruned scans; no
     shuffle beyond the fingerprint aggregates.
     """
-    root = tempfile.mkdtemp(prefix="s3u_codec_")
 
     def row_format(df: DataFrame) -> DataFrame:
         return df.select(
@@ -1327,55 +1262,52 @@ def sink_compression_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             if f.endswith(".parquet")
         )
 
-    try:
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderstatus"
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus"
+    )
+    fp_expr = F.md5(
+        F.concat_ws(
+            "",
+            F.expr(
+                "transform(array_sort(collect_list(struct(o_orderkey, r))),"
+                " s -> s.r)"
+            ),
         )
-        fp_expr = F.md5(
-            F.concat_ws(
-                "",
-                F.expr(
-                    "transform(array_sort(collect_list(struct(o_orderkey, r))),"
-                    " s -> s.r)"
-                ),
+    )
+    [src] = row_format(o).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        fp_expr.alias("fp"),
+    ).collect()
+    o.write.mode("overwrite").option("compression", "none").parquet(
+        f"{root}/none"
+    )
+    raw_bytes = dir_bytes(f"{root}/none")
+    rows = []
+    for codec in _CODECS:
+        out = f"{root}/{codec}"
+        o.write.mode("overwrite").option("compression", codec).parquet(
+            out
+        )
+        nbytes = dir_bytes(out)
+        assert nbytes > 0, f"{codec}: empty output"
+        if codec == "gzip":
+            assert nbytes < raw_bytes, (
+                "gzip output not smaller than uncompressed — "
+                "compression option silently ignored?"
             )
-        )
-        [src] = row_format(o).agg(
+        [got] = row_format(spark.read.parquet(out)).agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             fp_expr.alias("fp"),
         ).collect()
-        o.write.mode("overwrite").option("compression", "none").parquet(
-            f"{root}/none"
+        rows.append(
+            (
+                codec,
+                int(got["n"]),
+                got["fp"],
+                got["n"] == src["n"] and got["fp"] == src["fp"],
+            )
         )
-        raw_bytes = dir_bytes(f"{root}/none")
-        rows = []
-        for codec in _CODECS:
-            out = f"{root}/{codec}"
-            o.write.mode("overwrite").option("compression", codec).parquet(
-                out
-            )
-            nbytes = dir_bytes(out)
-            assert nbytes > 0, f"{codec}: empty output"
-            if codec == "gzip":
-                assert nbytes < raw_bytes, (
-                    "gzip output not smaller than uncompressed — "
-                    "compression option silently ignored?"
-                )
-            [got] = row_format(spark.read.parquet(out)).agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                fp_expr.alias("fp"),
-            ).collect()
-            rows.append(
-                (
-                    codec,
-                    int(got["n"]),
-                    got["fp"],
-                    got["n"] == src["n"] and got["fp"] == src["fp"],
-                )
-            )
-        return spark.createDataFrame(
-            rows, "codec string, n_rows long, content_fp string,"
-            " roundtrip_ok boolean"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(
+        rows, "codec string, n_rows long, content_fp string,"
+        " roundtrip_ok boolean"
+    )

@@ -21,7 +21,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from snapshot_s3_util_spark.io import load_table
+from snapshot_s3_util_spark.io import load_table, on_scratch
 from snapshot_s3_util_spark.registry import register
 
 _LEDGER_BUCKETS = 97
@@ -112,7 +112,8 @@ class LedgerStreamSource(DataSource):
     """,
     category="streaming",
 )
-def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_python_source(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Custom Python streaming source end-to-end: the ledger feed (one
     row per document, sized from the corpus so the oracle can mirror
     it) streams through offset-checkpointed micro-batches into the
@@ -128,33 +129,25 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     after ROUND(4) because amounts sit on a 0.1 grid (same argument as
     the price aggregates).
     """
-    import shutil
-    import tempfile
-
     from snapshot_s3_util_spark.streaming.stream_ops import _run_to_table
 
     n = load_table(spark, sf_dir, "documents").count()
     spark.dataSource.register(LedgerStreamSource)
-    tmp = tempfile.mkdtemp(prefix="s3u_pysrc_")
-    try:
-        stream = (
-            spark.readStream.format("s3u_ledger_stream")
-            .option("n_total", n)
-            .option("stride", max(1, (n + 2) // 3))  # ~3 micro-batches
-            .option("n_parts", 8)
-            .load()
+    stream = (
+        spark.readStream.format("s3u_ledger_stream")
+        .option("n_total", n)
+        .option("stride", max(1, (n + 2) // 3))  # ~3 micro-batches
+        .option("n_parts", 8)
+        .load()
+    )
+    table, _ = _run_to_table(
+        stream, "append", checkpoint_location=f"{tmp}/ckpt"
+    )
+    return (
+        table.groupBy("user_bucket")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.round(F.sum("amount"), 4).alias("sum_amount"),
+            F.max("seq").alias("max_seq"),
         )
-        table, _ = _run_to_table(
-            stream, "append", checkpoint_location=f"{tmp}/ckpt"
-        )
-        return (
-            table.groupBy("user_bucket")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.round(F.sum("amount"), 4).alias("sum_amount"),
-                F.max("seq").alias("max_seq"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )

@@ -9,8 +9,6 @@ the batch aggregate, which is what the oracle checks.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from typing import Iterable
 
 import pandas as pd
@@ -27,7 +25,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from snapshot_s3_util_spark.io import load_table_stream
+from snapshot_s3_util_spark.io import load_table_stream, on_scratch
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import EVENTS_REL
 from snapshot_s3_util_spark.streaming.stream_ops import _run_to_table
@@ -270,7 +268,8 @@ def _topk_update_fallback(
     """,
     category="streaming",
 )
-def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_tws_user_topk(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Per-user running top-3 values via `transformWithStateInPandas` —
     the Spark 4 stateful API (SPARK-49564 "transformWithState"): a
     StatefulProcessor object with named, independently-evolvable state
@@ -301,7 +300,6 @@ def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Without the pin, DuckDB would rank NaN ABOVE every real value
     (NaN sorts greatest) while the fold dropped it.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_tws_")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(prov_key, None)
     use_tws = _tws_runtime_available()
@@ -334,27 +332,25 @@ def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         table, _ = _run_to_table(
             ranked, "update", checkpoint_location=f"{tmp}/ckpt"
         )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        return (
-            table.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "user_id",
-                "n_events",
-                F.round("top3_sum", 4).alias("top3_sum"),
-                "top_value",
-            )
-            .localCheckpoint(eager=True)
-        )
     finally:
         if use_tws:
             if prev is None:
                 spark.conf.unset(prov_key)
             else:
                 spark.conf.set(prov_key, prev)
-        shutil.rmtree(tmp, ignore_errors=True)
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        table.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            "n_events",
+            F.round("top3_sum", 4).alias("top3_sum"),
+            "top_value",
+        )
+    )
 
 
 # --- state data source: reading a checkpoint's state store ------------
@@ -371,7 +367,8 @@ def stream_tws_user_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     category="streaming",
 )
-def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_state_inspect(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Offline state-store inspection via the Spark 4 state data source
     (`spark.read.format("statestore")`, SPARK-45511): run a streaming
     per-user count/sum aggregation to completion, then read the
@@ -389,22 +386,17 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     field names (`count`, `sum`) are the aggregation-buffer names laid
     down by stateStoreSave in Spark 4.1.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_ssread_")
-    try:
-        stream = load_table_stream(spark, sf_dir, "events")
-        agg = stream.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
+    stream = load_table_stream(spark, sf_dir, "events")
+    agg = stream.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("sum_value"),
+    )
+    _run_to_table(agg, "update", checkpoint_location=f"{tmp}/ckpt")
+    state = spark.read.format("statestore").load(f"{tmp}/ckpt")
+    return (
+        state.select(
+            F.col("key.user_id").alias("user_id"),
+            F.col("value.count").alias("n_events"),
+            F.round(F.col("value.sum"), 4).alias("sum_value"),
         )
-        _run_to_table(agg, "update", checkpoint_location=f"{tmp}/ckpt")
-        state = spark.read.format("statestore").load(f"{tmp}/ckpt")
-        return (
-            state.select(
-                F.col("key.user_id").alias("user_id"),
-                F.col("value.count").alias("n_events"),
-                F.round(F.col("value.sum"), 4).alias("sum_value"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )

@@ -23,13 +23,11 @@ below are unchanged.
 from __future__ import annotations
 
 import itertools
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from snapshot_s3_util_spark.io import load_table, load_table_stream
+from snapshot_s3_util_spark.io import load_table, load_table_stream, on_scratch
 from snapshot_s3_util_spark.registry import register
 from snapshot_s3_util_spark.sql_helpers import (
     EVENTS_REL,
@@ -218,7 +216,8 @@ HAVING DATE_TRUNC('hour', ts) + INTERVAL 1 HOUR <= (SELECT w FROM wm)
 @register(
     "stream_watermark_late", oracle=_WATERMARK_LATE_ORACLE, category="streaming"
 )
-def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_watermark_late(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Late-data handling: a second micro-batch of too-late rows must
     NOT reopen finalized windows.
 
@@ -233,47 +232,42 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     late arrivals. Append mode emits only finalized windows; the late
     batch's windows are already closed, so counts equal batch-1-only.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_late_")
-    try:
-        ev = load_table(
-            spark, sf_dir, "events",
-            ts_min="2024-01-12 00:00:00", ts_max="2024-01-15 00:00:00",
-        )
-        on_time = ev.filter(
-            (F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp"))
-            & (F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))
-        )
-        late = ev.filter(
-            (F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp"))
-            & (F.col("ts") < F.lit("2024-01-12 06:00:00").cast("timestamp"))
-        )
-        src_dir = f"{tmp}/src"
-        on_time.write.mode("overwrite").parquet(src_dir)
+    ev = load_table(
+        spark, sf_dir, "events",
+        ts_min="2024-01-12 00:00:00", ts_max="2024-01-15 00:00:00",
+    )
+    on_time = ev.filter(
+        (F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp"))
+        & (F.col("ts") < F.lit("2024-01-15 00:00:00").cast("timestamp"))
+    )
+    late = ev.filter(
+        (F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp"))
+        & (F.col("ts") < F.lit("2024-01-12 06:00:00").cast("timestamp"))
+    )
+    src_dir = f"{tmp}/src"
+    on_time.write.mode("overwrite").parquet(src_dir)
 
-        stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-        agg = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        name = f"s3u_stream_{next(_counter)}"
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()  # batch 1: watermark advances
-        late.write.mode("append").parquet(src_dir)  # batch 2: late rows
-        q.processAllAvailable()
-        q.stop()
-        return (
-            spark.table(name)
-            .select(F.col("w.start").alias("window_start"), "n_events")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream = spark.readStream.schema(ev.schema).parquet(src_dir)
+    agg = (
+        stream.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+    name = f"s3u_stream_{next(_counter)}"
+    q = (
+        agg.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    q.processAllAvailable()  # batch 1: watermark advances
+    late.write.mode("append").parquet(src_dir)  # batch 2: late rows
+    q.processAllAvailable()
+    q.stop()
+    return (
+        spark.table(name)
+        .select(F.col("w.start").alias("window_start"), "n_events")
+    )
 
 
 @register(
@@ -452,7 +446,10 @@ def _export_write_partitioned(df: DataFrame, out: str) -> None:
     """,
     category="streaming",
 )
-def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_foreach_batch_export(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """Streaming export sink: foreachBatch writing partitioned parquet
     (reference workflow A3 as a continuous micro-batch pipeline).
 
@@ -467,34 +464,29 @@ def stream_foreach_batch_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from snapshot_s3_util_spark.sources.snapshot_source import read_snapshot
 
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_export_")
     out = f"{tmp}/export"
-    try:
-        stream = load_table_stream(spark, sf_dir, "events")
+    stream = load_table_stream(spark, sf_dir, "events")
 
-        def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            _export_write_partitioned(batch_df, out)
+    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        _export_write_partitioned(batch_df, out)
 
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
+    q = (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    back = read_snapshot(spark, out)
+    row_md5 = row_md5_col("event_id", "user_id")
+    return (
+        back.select("event_type", row_md5.alias("h"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            digests_fp_col("h").alias("content_fp"),
         )
-        q.processAllAvailable()
-        q.stop()
-        back = read_snapshot(spark, out)
-        row_md5 = row_md5_col("event_id", "user_id")
-        return (
-            back.select("event_type", row_md5.alias("h"))
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                digests_fp_col("h").alias("content_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 _TOPK_WIN = "6 hours"
@@ -559,7 +551,7 @@ def stream_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "rnk",
         )
-        .localCheckpoint()
+        .localCheckpoint(eager=True)
     )
 
 
@@ -586,7 +578,8 @@ FROM final GROUP BY status
 
 
 @register("stream_cdc_upsert", oracle=_CDC_ORACLE, category="streaming")
-def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_cdc_upsert(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Streaming CDC apply: a change feed (insert / update / delete
     rows derived deterministically from `orders`) streams through a
     file source in multiple micro-batches, and `foreachBatch` MERGEs
@@ -607,109 +600,104 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions (`sink_partition_overwrite` discipline) and
     state versions live behind a manifest (`hb_time_travel_read`).
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_cdc_")
-    try:
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("k"),
-            F.col("o_orderstatus").alias("status"),
-            F.col("o_totalprice").alias("price"),
-        )
-        base = o.filter(F.col("k") % 3 != 0)
-        state_dir = lambda v: f"{tmp}/state_v{v}"
-        base.write.mode("overwrite").parquet(state_dir(0))
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_totalprice").alias("price"),
+    )
+    base = o.filter(F.col("k") % 3 != 0)
+    state_dir = lambda v: f"{tmp}/state_v{v}"
+    base.write.mode("overwrite").parquet(state_dir(0))
 
-        cdc = (
-            o.filter(F.col("k") % 3 == 0)
+    cdc = (
+        o.filter(F.col("k") % 3 == 0)
+        .select(
+            "k",
+            F.lit("I").alias("op"),
+            F.lit("N").alias("new_status"),
+            F.col("price").alias("new_price"),
+        )
+        .unionAll(
+            o.filter(
+                (F.col("k") % 3 != 0) & (F.col("k") % 7 == 0)
+            ).select(
+                "k",
+                F.lit("D").alias("op"),
+                F.lit(None).cast("string").alias("new_status"),
+                F.lit(None).cast("double").alias("new_price"),
+            )
+        )
+        .unionAll(
+            o.filter(
+                (F.col("k") % 3 != 0)
+                & (F.col("k") % 7 != 0)
+                & (F.col("k") % 5 == 0)
+            ).select(
+                "k",
+                F.lit("U").alias("op"),
+                F.lit("U").alias("new_status"),
+                (F.col("price") + 10).alias("new_price"),
+            )
+        )
+    )
+    src = f"{tmp}/cdc_src"
+    cdc.repartition(4, "k").write.mode("overwrite").parquet(src)
+    stream = (
+        spark.readStream.schema(cdc.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+    version = [0]
+
+    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        sp = batch_df.sparkSession
+        cur = sp.read.parquet(state_dir(version[0]))
+        ch = batch_df
+        merged = (
+            cur.join(ch, "k", "full_outer")
+            .filter(~F.col("op").eqNullSafe("D"))
             .select(
                 "k",
-                F.lit("I").alias("op"),
-                F.lit("N").alias("new_status"),
-                F.col("price").alias("new_price"),
-            )
-            .unionAll(
-                o.filter(
-                    (F.col("k") % 3 != 0) & (F.col("k") % 7 == 0)
-                ).select(
-                    "k",
-                    F.lit("D").alias("op"),
-                    F.lit(None).cast("string").alias("new_status"),
-                    F.lit(None).cast("double").alias("new_price"),
+                F.when(
+                    F.col("op").isin("I", "U"), F.col("new_status")
                 )
-            )
-            .unionAll(
-                o.filter(
-                    (F.col("k") % 3 != 0)
-                    & (F.col("k") % 7 != 0)
-                    & (F.col("k") % 5 == 0)
-                ).select(
-                    "k",
-                    F.lit("U").alias("op"),
-                    F.lit("U").alias("new_status"),
-                    (F.col("price") + 10).alias("new_price"),
+                .otherwise(F.col("status"))
+                .alias("status"),
+                F.when(
+                    F.col("op").isin("I", "U"), F.col("new_price")
                 )
+                .otherwise(F.col("price"))
+                .alias("price"),
             )
         )
-        src = f"{tmp}/cdc_src"
-        cdc.repartition(4, "k").write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(cdc.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        merged.write.mode("overwrite").parquet(state_dir(version[0] + 1))
+        version[0] += 1
+
+    q = (
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+
+    final = spark.read.parquet(state_dir(version[0]))
+    return (
+        final.groupBy("status")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            # integer-cents sum: double SUM order-divergence was
+            # measured at ~3e-5 by sf0.1 (review finding) and grows
+            # with scale; cents are exact at any size
+            F.round(
+                F.sum(F.round(F.col("price") * 100).cast("bigint"))
+                / 100.0,
+                2,
+            ).alias("sum_price"),
+            keys_fp_col("k").alias("keys_fp"),
         )
-
-        version = [0]
-
-        def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            sp = batch_df.sparkSession
-            cur = sp.read.parquet(state_dir(version[0]))
-            ch = batch_df
-            merged = (
-                cur.join(ch, "k", "full_outer")
-                .filter(~F.col("op").eqNullSafe("D"))
-                .select(
-                    "k",
-                    F.when(
-                        F.col("op").isin("I", "U"), F.col("new_status")
-                    )
-                    .otherwise(F.col("status"))
-                    .alias("status"),
-                    F.when(
-                        F.col("op").isin("I", "U"), F.col("new_price")
-                    )
-                    .otherwise(F.col("price"))
-                    .alias("price"),
-                )
-            )
-            merged.write.mode("overwrite").parquet(state_dir(version[0] + 1))
-            version[0] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        final = spark.read.parquet(state_dir(version[0]))
-        return (
-            final.groupBy("status")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                # integer-cents sum: double SUM order-divergence was
-                # measured at ~3e-5 by sf0.1 (review finding) and grows
-                # with scale; cents are exact at any size
-                F.round(
-                    F.sum(F.round(F.col("price") * 100).cast("bigint"))
-                    / 100.0,
-                    2,
-                ).alias("sum_price"),
-                keys_fp_col("k").alias("keys_fp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 _SSLOJ_ORACLE = f"""
@@ -745,7 +733,10 @@ FROM j GROUP BY user_id
 @register(
     "stream_left_outer_watermark", oracle=_SSLOJ_ORACLE, category="streaming"
 )
-def stream_left_outer_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_left_outer_watermark(
+    spark: SparkSession, sf_dir: str, tmp: str
+) -> DataFrame:
     """Stream-stream LEFT OUTER join with watermark-driven NULL
     emission: view→purchase attribution where UNCONVERTED views must
     still come out (with NULL purchase) — but a streaming outer row
@@ -768,88 +759,83 @@ def stream_left_outer_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "late" from the first micro-batch and silently dropped — the
     oracle applies the same floor explicitly.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_loj_")
-    try:
-        ev = load_table(spark, sf_dir, "events")
-        flush_ts = F.timestamp_micros(
-            F.lit(
-                ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-                + 7 * 24 * 3600 * 1_000_000
-            )
+    ev = load_table(spark, sf_dir, "events")
+    flush_ts = F.timestamp_micros(
+        F.lit(
+            ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
+            + 7 * 24 * 3600 * 1_000_000
         )
-        sentinel = (
-            ev.limit(1)
-            .select(
-                F.lit(-1).cast("long").alias("event_id"),
-                flush_ts.alias("ts"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit("view").alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast(ev.schema["props"].dataType).alias("props"),
-            )
+    )
+    sentinel = (
+        ev.limit(1)
+        .select(
+            F.lit(-1).cast("long").alias("event_id"),
+            flush_ts.alias("ts"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit("view").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast(ev.schema["props"].dataType).alias("props"),
         )
-        sentinel_p = sentinel.withColumn("event_type", F.lit("purchase"))
-        src_dir = f"{tmp}/src"
-        staged = ev.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).unionAll(sentinel).unionAll(sentinel_p)
-        staged.write.mode("overwrite").parquet(src_dir)
+    )
+    sentinel_p = sentinel.withColumn("event_type", F.lit("purchase"))
+    src_dir = f"{tmp}/src"
+    staged = ev.select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    ).unionAll(sentinel).unionAll(sentinel_p)
+    staged.write.mode("overwrite").parquet(src_dir)
 
-        views = (
-            spark.readStream.schema(staged.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("user_id").alias("v_user"),
-                F.col("event_id").alias("view_id"),
-                F.col("ts").alias("v_ts"),
-            )
-            .withWatermark("v_ts", "2 hours")
+    views = (
+        spark.readStream.schema(staged.schema)
+        .parquet(src_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("user_id").alias("v_user"),
+            F.col("event_id").alias("view_id"),
+            F.col("ts").alias("v_ts"),
         )
-        purchases = (
-            spark.readStream.schema(staged.schema)
-            .parquet(src_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "2 hours")
+        .withWatermark("v_ts", "2 hours")
+    )
+    purchases = (
+        spark.readStream.schema(staged.schema)
+        .parquet(src_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
         )
-        joined = views.join(
-            purchases,
-            F.expr(
-                "v_user = p_user AND p_ts >= v_ts "
-                "AND p_ts <= v_ts + interval 1 hour"
-            ),
-            "left_outer",
-        ).select(
-            F.col("v_user").alias("user_id"), "view_id", "purchase_id"
-        )
-        table, _ = _run_to_table(joined, "append")
-        return (
-            table.filter(F.col("user_id") >= 0)  # drop the sentinels
-            .groupBy("user_id")
-            .agg(
-                F.countDistinct("view_id").cast("bigint").alias("n_views"),
-                F.countDistinct(
-                    F.when(
-                        F.col("purchase_id").isNotNull(), F.col("view_id")
-                    )
+        .withWatermark("p_ts", "2 hours")
+    )
+    joined = views.join(
+        purchases,
+        F.expr(
+            "v_user = p_user AND p_ts >= v_ts "
+            "AND p_ts <= v_ts + interval 1 hour"
+        ),
+        "left_outer",
+    ).select(
+        F.col("v_user").alias("user_id"), "view_id", "purchase_id"
+    )
+    table, _ = _run_to_table(joined, "append")
+    return (
+        table.filter(F.col("user_id") >= 0)  # drop the sentinels
+        .groupBy("user_id")
+        .agg(
+            F.countDistinct("view_id").cast("bigint").alias("n_views"),
+            F.countDistinct(
+                F.when(
+                    F.col("purchase_id").isNotNull(), F.col("view_id")
                 )
-                .cast("bigint")
-                .alias("n_converted_views"),
-                F.sum(
-                    F.when(F.col("purchase_id").isNotNull(), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("n_pairs"),
             )
-            .localCheckpoint(eager=True)
+            .cast("bigint")
+            .alias("n_converted_views"),
+            F.sum(
+                F.when(F.col("purchase_id").isNotNull(), 1).otherwise(0)
+            )
+            .cast("bigint")
+            .alias("n_pairs"),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 _REPLAY_ORACLE = f"""
@@ -865,7 +851,8 @@ FROM {EVENTS_REL} e GROUP BY event_type
 @register(
     "stream_idempotent_replay", oracle=_REPLAY_ORACLE, category="streaming"
 )
-def stream_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
+@on_scratch
+def stream_idempotent_replay(spark: SparkSession, sf_dir: str, tmp: str) -> DataFrame:
     """Exactly-once evidence by REPLAY: run a foreachBatch export,
     stop, then START THE SAME QUERY AGAIN on the SAME checkpoint —
     the restarted query must recognize every source file as committed
@@ -880,52 +867,47 @@ def stream_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan note: the second start costs ONE empty micro-batch of
     planning — offset log reconciliation, no data motion.
     """
-    tmp = tempfile.mkdtemp(prefix="s3u_stream_replay_")
     out = f"{tmp}/export"
     ckpt = f"{tmp}/ckpt"
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    try:
-        for _ in range(2):  # pass 1 writes; pass 2 must be a no-op
-            q = (
-                load_table_stream(spark, sf_dir, "events")
-                .writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            if _ == 0:
-                first = {
-                    r["event_type"]: r["n"]
-                    for r in spark.read.parquet(out)
-                    .groupBy("event_type")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-        after = spark.read.parquet(out).groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_after_replay")
+    for _ in range(2):  # pass 1 writes; pass 2 must be a no-op
+        q = (
+            load_table_stream(spark, sf_dir, "events")
+            .writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", ckpt)
+            .start()
         )
-        firsts = spark.createDataFrame(
-            [(k, v) for k, v in first.items()],
-            "event_type string, n_rows long",
+        q.processAllAvailable()
+        q.stop()
+        if _ == 0:
+            first = {
+                r["event_type"]: r["n"]
+                for r in spark.read.parquet(out)
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+    after = spark.read.parquet(out).groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_after_replay")
+    )
+    firsts = spark.createDataFrame(
+        [(k, v) for k, v in first.items()],
+        "event_type string, n_rows long",
+    )
+    return (
+        firsts.join(after, "event_type")
+        .select(
+            "event_type",
+            "n_rows",
+            "n_after_replay",
+            (F.col("n_after_replay") - F.col("n_rows"))
+            .cast("bigint")
+            .alias("n_duplicates"),
+            (F.col("n_after_replay") == F.col("n_rows")).alias(
+                "exactly_once"
+            ),
         )
-        return (
-            firsts.join(after, "event_type")
-            .select(
-                "event_type",
-                "n_rows",
-                "n_after_replay",
-                (F.col("n_after_replay") - F.col("n_rows"))
-                .cast("bigint")
-                .alias("n_duplicates"),
-                (F.col("n_after_replay") == F.col("n_rows")).alias(
-                    "exactly_once"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )

@@ -30,7 +30,7 @@ TABLES = (
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01"))
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
         "--window",
         action="store_true",

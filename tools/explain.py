@@ -22,9 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("op")
-    ap.add_argument(
-        "--sf", default=os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
-    )
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument(
         "--full", action="store_true", help="also print the formatted plan"
     )

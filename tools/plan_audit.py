@@ -36,9 +36,7 @@ from snapshot_s3_util_spark.plans.audit import (
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--sf", default=os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
-    )
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--report", action="store_true", help="write PLAN_AUDIT.md")
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
