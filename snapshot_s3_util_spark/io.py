@@ -14,10 +14,21 @@ files in a directory made, materialized against and removed by
 :func:`on_scratch` — locally a `tempfile` dir standing in for the S3
 bucket; at cluster scale the one place to point at shared storage.
 
+Inputs are immutable: a snapshot or a test tier is never rewritten in
+place, so an input's schema is a property of the file version, the way
+a catalog keeps it. The loaders infer it once per process with Spark's
+footer-reading job, keep it in :data:`_SCHEMAS` keyed by the path's
+Hadoop `FileSystem` status (path, modification time, length; s3a
+answers too) and the session's `nanosAsLong` flag, and read every later
+time with that schema and no job. A rewritten file has a new status,
+so it is inferred again; a directory of part files is keyed by the
+directory's own status, which a write that replaces it changes.
+
 Scale notes (100 TB): `spark.read.parquet` on a directory tree gets
 file-listing parallelism, partition pruning and row-group skipping for
-free; the loaders below add nothing driver-side (no collect, no schema
-inference loops), so they scale with the FileSourceScanExec machinery.
+free; past the first read the loaders add one `getFileStatus` call on
+the driver and nothing else, so they scale with the FileSourceScanExec
+machinery.
 """
 
 from __future__ import annotations
@@ -30,6 +41,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from snapshot_s3_util_spark.session import ensure_conf
 
@@ -84,7 +96,8 @@ def load_table(
     source of truth and pass these purely as pushdown accelerators.
     """
     ensure_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(_stored_schema(spark, path)).parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # ns-encoded generation
@@ -108,7 +121,7 @@ def load_table(
 def load_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Stream one test table from where it lies, as a file source.
 
-    The streaming twin of :func:`load_table`: same raw schema, same
+    The streaming twin of :func:`load_table`: same stored raw schema, same
     `events` timestamp normalization, and nothing written anywhere —
     at 100 TB-of-stream the source is the landing directory itself, so
     a staged copy would be a full write before the first micro-batch.
@@ -123,9 +136,32 @@ def load_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reads every part file under it in either layout.
     """
     ensure_conf(spark)
-    raw = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    raw = _stored_schema(spark, f"{sf_dir}/{name}.parquet")
     stream = spark.readStream.schema(raw).parquet(f"{sf_dir}/{{{name}.parquet}}")
     return _normalize_ts(stream) if name == "events" else stream
+
+
+# (path, modification time, length, nanosAsLong) -> inferred schema
+_SCHEMAS: dict[tuple[str, int, int, str], StructType] = {}
+
+
+def _stored_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the Parquet input at ``path``,
+    inferred once per file version and session flag (module
+    docstring). `nanosAsLong` is part of the key because it decides
+    how a TIMESTAMP(NANOS) column is typed (bigint, or refused)."""
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    status = hpath.getFileSystem(hconf).getFileStatus(hpath)
+    key = (
+        status.getPath().toString(),
+        status.getModificationTime(),
+        status.getLen(),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
@@ -148,18 +184,47 @@ def on_scratch(
     creates ``root``, runs ``fn``, materializes the result with an
     eager `localCheckpoint` (the frame reads files under ``root``, so
     it must hold its rows before they go) and removes ``root`` however
-    ``fn`` exits. Stack it under ``@register``.
+    ``fn`` exits. A result whose rows were built on the driver reads
+    nothing under ``root`` and is returned as it is, saving the
+    checkpoint's job. Stack it under ``@register``.
     """
 
     @functools.wraps(fn)
     def op(spark: SparkSession, sf_dir: str) -> DataFrame:
         root = tempfile.mkdtemp(prefix=f"s3u_{fn.__name__}_")
         try:
-            return fn(spark, sf_dir, root).localCheckpoint(eager=True)
+            df = fn(spark, sf_dir, root)
+            return df if _rows_on_driver(df) else df.localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
 
     return op
+
+
+def _rows_on_driver(df: DataFrame) -> bool:
+    """True when every row of ``df`` already lives on the driver.
+
+    That is a `LocalRelation` (SQL `VALUES`, folded local data), or the
+    `LogicalRDD` that classic PySpark's ``createDataFrame(rows)`` makes,
+    whose lineage starts only at parallelized collections (the rows
+    themselves, re-pickled and converted on the way). The package
+    parallelizes nothing else. A lineage with any other source (a file
+    scan, a checkpoint) may read files, so the answer is then False.
+    """
+    plan = df._jdf.queryExecution().optimizedPlan()
+    kind = plan.getClass().getSimpleName()
+    if kind != "LogicalRDD":
+        return kind == "LocalRelation"
+    todo = [plan.rdd()]
+    while todo:
+        rdd = todo.pop()
+        deps = rdd.dependencies()
+        if deps.isEmpty() and (
+            rdd.getClass().getSimpleName() != "ParallelCollectionRDD"
+        ):
+            return False
+        todo.extend(deps.apply(i).rdd() for i in range(deps.size()))
+    return True
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

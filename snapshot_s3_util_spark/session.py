@@ -95,6 +95,15 @@ def get_spark(app_name: str = "snapshot-s3-util-spark",
         # without affecting any healthy path (it is an accept() bound,
         # not a wait).
         .config("spark.python.authenticate.socketTimeout", "120s")
+        # The JVM-wide cache of compiled whole-stage-codegen classes
+        # (default 100 entries). Guava splits the cap over 4 LRU
+        # segments of 25, so a segment overflows long before the total
+        # does. Measured at sf0.001: each warm pass over perfbench's
+        # `flagship` ops compiled 79-83 of its 113 classes again, and
+        # `backup` 20 of its 88, each then JIT-warmed again; at 1000
+        # neither compiles any. A static conf, so it is set here:
+        # `ensure_conf` cannot set it on a harness session.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

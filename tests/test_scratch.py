@@ -2,9 +2,10 @@
 
 Ops that write files and read them back stage them in a scratch dir
 that `on_scratch` creates, materializes the result against, and
-removes. These tests pin that lifecycle on a toy op, guard that no
-other package code makes or removes scratch dirs, and pin the session
-factory's CPU default.
+removes; a result built on the driver needs no materializing. These
+tests pin that lifecycle on toy ops, guard that no other package code
+makes or removes scratch dirs, and pin the session factory's CPU
+default.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import os
 import pytest
 
 import snapshot_s3_util_spark
+from perfbench.sparkstats import StatusReader
 from snapshot_s3_util_spark import session
 from snapshot_s3_util_spark.io import on_scratch
 
@@ -46,6 +48,33 @@ def test_on_scratch_materializes_then_removes_root(spark):
     assert os.path.basename(seen["root"]).startswith("s3u_toy_")
     assert sorted(r.x for r in df.collect()) == [2 * i for i in range(10)]
     assert toy.__name__ == "toy" and toy.__doc__ == "toy op docstring"
+
+
+def test_on_scratch_returns_driver_rows_without_a_job(spark):
+    rows = [(1, "a"), (2, "b")]
+
+    @on_scratch
+    def toy(spark, sf_dir, root):
+        return spark.createDataFrame(rows, "k int, v string")
+
+    stats = StatusReader(spark)
+    df = toy(spark, "unused")
+    assert stats.new_jobs() == []
+    assert sorted(tuple(r) for r in df.collect()) == rows
+
+
+def test_package_parallelizes_no_collection():
+    """`on_scratch` takes a lineage rooted only in parallelized
+    collections for rows `createDataFrame` put on the driver; a
+    `parallelize` of, say, paths under the scratch dir would break
+    that."""
+    calls = sorted(
+        f"{rel}:{node.lineno}"
+        for rel, _owner, node in _package_calls()
+        if isinstance(node.func, ast.Attribute)
+        and node.func.attr == "parallelize"
+    )
+    assert not calls, "parallelize in the package: " + ", ".join(calls)
 
 
 def test_on_scratch_removes_root_when_the_op_raises():

@@ -3,7 +3,9 @@
 `io.load_table_stream` streams `<tier>/events.parquet` where it lies,
 whether that is one file (the test tiers) or a directory of part files
 (the stress tiers), applies the same `ts` normalization as
-`io.load_table`, and writes nothing into the tier.
+`io.load_table`, and writes nothing into the tier. Both loaders take
+each input's schema from `io`'s schema store: inferred by a Spark job
+on the first read of a file version, reused without a job after that.
 """
 
 from __future__ import annotations
@@ -19,8 +21,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.readwriter import DataStreamReader
 
+from perfbench.sparkstats import StatusReader
 from snapshot_s3_util_spark import REGISTRY
-from snapshot_s3_util_spark.io import load_table, load_table_stream
+from snapshot_s3_util_spark.io import _stored_schema, load_table, load_table_stream
+from snapshot_s3_util_spark.session import ensure_conf
 from snapshot_s3_util_spark.streaming import stream_ops
 
 # Every op whose stream is `events` as stored.
@@ -152,3 +156,84 @@ def test_batch_and_stream_reads_agree_on_both_ts_encodings(
     )
     assert 0 < len(in_range) < len(want)
     assert _rows(load_table(spark, tier, "events", ts_min=lo, ts_max=hi)) == in_range
+
+
+def test_warm_load_table_starts_no_job(spark, sf_dir):
+    path = f"{sf_dir}/orders.parquet"
+    load_table(spark, sf_dir, "orders")
+    stats = StatusReader(spark)
+    warm = load_table(spark, sf_dir, "orders")
+    assert stats.new_jobs() == []
+    assert warm.schema == spark.read.parquet(path).schema
+    assert _rows(warm) == _rows(spark.read.parquet(path))
+
+
+def _add_note(t: pa.Table) -> pa.Table:
+    return t.append_column("o_note", pa.array(["n"] * t.num_rows))
+
+
+def _rename_comment(t: pa.Table) -> pa.Table:
+    return t.rename_columns(
+        ["o_remarks" if c == "o_comment" else c for c in t.column_names]
+    )
+
+
+@pytest.mark.parametrize(
+    "rewrite, same_size",
+    [(_add_note, False), (_rename_comment, True)],
+    ids=["size", "mtime"],
+)
+def test_rewritten_input_is_inferred_again(
+    spark, sf_dir, tmp_path, rewrite, same_size
+):
+    """A file rewritten in place has a new length or modification time,
+    so its next read infers again and sees the new columns. The
+    rename keeps the length; only the (pushed-forward) mtime moves."""
+    tier = str(tmp_path / "tier")
+    os.makedirs(tier)
+    path = f"{tier}/orders.parquet"
+    src = pq.read_table(f"{sf_dir}/orders.parquet").replace_schema_metadata()
+    pq.write_table(src, path)
+    assert load_table(spark, tier, "orders").columns == src.column_names
+    size, mtime = os.path.getsize(path), os.path.getmtime(path)
+
+    new = rewrite(src)
+    pq.write_table(new, path)
+    os.utime(path, (mtime + 10, mtime + 10))
+    assert (os.path.getsize(path) == size) == same_size
+    stats = StatusReader(spark)
+    df = load_table(spark, tier, "orders")
+    assert len(stats.new_jobs()) == 1
+    assert df.columns == new.column_names
+    assert _rows(df) == _rows(spark.read.parquet(path))
+
+
+def test_nanos_as_long_is_part_of_the_key(spark, sf_dir, tmp_path):
+    """The stored bigint `ts` of a TIMESTAMP(NANOS) file is kept for
+    `nanosAsLong=true` only: with the flag off the read infers again,
+    and Spark refuses the column instead of reading it as bigint."""
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    tier = str(tmp_path / "ns")
+    _write_events(f"{sf_dir}/events.parquet", tier, "ns")
+    path = f"{tier}/events.parquet"
+    ensure_conf(spark)
+    assert dict(
+        (f.name, f.dataType.simpleString()) for f in _stored_schema(spark, path)
+    )["ts"] == "bigint"
+    spark.conf.set(flag, "false")
+    try:
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            _stored_schema(spark, path)
+    finally:
+        spark.conf.set(flag, "true")
+    stats = StatusReader(spark)
+    assert dict(load_table(spark, tier, "events").dtypes)["ts"] == "timestamp"
+    assert stats.new_jobs() == []
+
+
+def test_stream_after_batch_read_starts_no_inference_job(spark, sf_dir):
+    batch = load_table(spark, sf_dir, "events")
+    stats = StatusReader(spark)
+    stream = load_table_stream(spark, sf_dir, "events")
+    assert stats.new_jobs() == []
+    assert stream.schema == batch.schema
