@@ -26,11 +26,13 @@ Racing stages of that job can transiently compute a partition twice;
 every lazily checkpointed frame is deterministic, so the duplicate is
 consistent. Checkpoints stay eager where (a) they must materialize
 before a staging dir they read is removed — `io.on_scratch` takes that
-checkpoint for every op that stages files (sinks, scans, streaming),
-(b) they are per-round frontiers feeding a broadcast build, where lazy
-would fold round compute into the broadcast job, or (c) a measured
-lazy A/B lost (the IVF centroids, reason at the site). Every eager
-checkpoint spells `eager=True` out.
+checkpoint for every op that stages files (sinks, scans, streaming)
+and skips it when every leaf of the result's plan is already on the
+driver (rows built there, or a finished memory sink's, which streaming
+ops return as they are), (b) they are per-round frontiers feeding a
+broadcast build, where lazy would fold round compute into the
+broadcast job, or (c) a measured lazy A/B lost (the IVF centroids,
+reason at the site). Every eager checkpoint spells `eager=True` out.
 """
 
 from snapshot_s3_util_spark.registry import REGISTRY, register  # noqa: F401

@@ -184,9 +184,10 @@ def on_scratch(
     creates ``root``, runs ``fn``, materializes the result with an
     eager `localCheckpoint` (the frame reads files under ``root``, so
     it must hold its rows before they go) and removes ``root`` however
-    ``fn`` exits. A result whose rows were built on the driver reads
-    nothing under ``root`` and is returned as it is, saving the
-    checkpoint's job. Stack it under ``@register``.
+    ``fn`` exits. A result computed only from rows on the driver
+    (built there, or a finished memory sink's) reads nothing under
+    ``root`` and is returned as it is, saving the checkpoint's job.
+    Stack it under ``@register``.
     """
 
     @functools.wraps(fn)
@@ -202,20 +203,28 @@ def on_scratch(
 
 
 def _rows_on_driver(df: DataFrame) -> bool:
-    """True when every row of ``df`` already lives on the driver.
+    """True when ``df`` is computed only from rows on the driver.
 
-    That is a `LocalRelation` (SQL `VALUES`, folded local data), or the
-    `LogicalRDD` that classic PySpark's ``createDataFrame(rows)`` makes,
-    whose lineage starts only at parallelized collections (the rows
-    themselves, re-pickled and converted on the way). The package
-    parallelizes nothing else. A lineage with any other source (a file
-    scan, a checkpoint) may read files, so the answer is then False.
+    Every leaf of the optimized plan, subqueries included, is then a
+    `LocalRelation` (SQL `VALUES`, folded local data), a `MemoryPlan`
+    (a finished memory sink's rows), or the `LogicalRDD` that classic
+    PySpark's ``createDataFrame(rows)`` makes, whose lineage starts
+    only at parallelized collections (the rows themselves, re-pickled
+    and converted on the way). The package parallelizes nothing else.
+    Any other leaf (a file scan, the statestore reader, a checkpoint)
+    may read files, so the answer is then False.
     """
     plan = df._jdf.queryExecution().optimizedPlan()
-    kind = plan.getClass().getSimpleName()
-    if kind != "LogicalRDD":
-        return kind == "LocalRelation"
-    todo = [plan.rdd()]
+    subqueries = plan.subqueriesAll()
+    todo = []
+    for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+        leaves = p.collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRDD":
+                todo.append(leaf.rdd())
+            elif kind not in ("LocalRelation", "MemoryPlan"):
+                return False
     while todo:
         rdd = todo.pop()
         deps = rdd.dependencies()
@@ -225,10 +234,6 @@ def _rows_on_driver(df: DataFrame) -> bool:
             return False
         todo.extend(deps.apply(i).rdd() for i in range(deps.size()))
     return True
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,12 +249,6 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL-API paths)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def spread_compute(df: DataFrame, *keys: str) -> DataFrame:

@@ -589,27 +589,12 @@ GROUP BY o_orderstatus
 """
 
 
-@register("scan_ignore_corrupt", oracle=_CORRUPT_ORACLE, category="scan")
-@on_scratch
-def scan_ignore_corrupt(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    """Corrupt-file-tolerant landing-zone scan: a 4-bucket parquet
-    layout is written, one bucket's data file is then OVERWRITTEN WITH
-    GARBAGE BYTES (a torn upload / bad disk emulation), and the read
-    back runs with `ignoreCorruptFiles` so the job completes on the
-    surviving buckets instead of dying — the batch-recovery posture
-    every large ingest needs (the default fail-fast read DOES die; a
-    guard below asserts that, so the option is load-bearing).
-
-    The oracle predicts the recovered rows in closed form (buckets
-    0-2, i.e. keys with k%4≠3), with per-status counts, key sums and
-    order-insensitive key fingerprints — so silently dropping MORE
-    than the corrupt bucket, or resurrecting part of it, both fail.
-
-    Plan: bucket routing is one narrow column + repartition on the
-    bucket key (each output file = one bucket); the read-back is a
-    normal pruned parquet scan over the surviving files.
-    """
+def write_corrupt_buckets(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """`orders` as 4 key buckets under ``root``, bucket 3's files
+    overwritten with non-Parquet bytes. Their `.crc` sidecars go, so a
+    read meets the bytes (as on S3), not a checksum mismatch."""
     import glob
+    import os
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -624,17 +609,32 @@ def scan_ignore_corrupt(spark: SparkSession, sf_dir: str, root: str) -> DataFram
     for v in victims:
         with open(v, "wb") as fh:
             fh.write(b"\x00CORRUPT" * 128)  # not a parquet footer
+    for crc in glob.glob(f"{root}/b=3/.*.crc"):
+        os.remove(crc)
 
-    try:
-        spark.read.parquet(root).count()
-        raise AssertionError(
-            "fail-fast read survived a corrupt file; "
-            "ignoreCorruptFiles would not be load-bearing"
-        )
-    except Exception as exc:  # noqa: BLE001 — Spark wraps the IO error
-        if isinstance(exc, AssertionError):
-            raise
 
+@register("scan_ignore_corrupt", oracle=_CORRUPT_ORACLE, category="scan")
+@on_scratch
+def scan_ignore_corrupt(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    """Corrupt-file-tolerant landing-zone scan: a 4-bucket parquet
+    layout is written, one bucket's data file is then OVERWRITTEN WITH
+    GARBAGE BYTES (a torn upload / bad disk emulation), and the read
+    back runs with `ignoreCorruptFiles` so the job completes on the
+    surviving buckets instead of dying — the batch-recovery posture
+    every large ingest needs (the default fail-fast read DOES die;
+    `tests/test_semantics.py` asserts that on the same layout, so the
+    option is load-bearing).
+
+    The oracle predicts the recovered rows in closed form (buckets
+    0-2, i.e. keys with k%4≠3), with per-status counts, key sums and
+    order-insensitive key fingerprints — so silently dropping MORE
+    than the corrupt bucket, or resurrecting part of it, both fail.
+
+    Plan: bucket routing is one narrow column + repartition on the
+    bucket key (each output file = one bucket); the read-back is a
+    normal pruned parquet scan over the surviving files.
+    """
+    write_corrupt_buckets(spark, sf_dir, root)
     # NO b!=3 filter here: partition pruning would skip the corrupt
     # file at planning time and the option would never be exercised —
     # the scan must HIT the garbage file and recover past it.

@@ -60,30 +60,32 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "snapshot-s3-util-spark",
-              cpus: int | str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+              cpus: int | str | None = None) -> SparkSession:
     """Build the engine's canonical local session.
 
     `cpus` defaults to `SPARK_GRAFT_CPUS`, else to the CPUs this process
     may run on (what `nproc` prints), never a fixed slot count the host
-    may not have. Shuffle partitions follow `cpus`. At cluster scale the
-    same conf set applies minus `master`, with shuffle partitions sized
-    to ~2-3x total cores and `spark.sql.files.maxPartitionBytes` left at
-    256m so a 100 TB scan yields ~400k well-sized input splits.
+    may not have. Shuffle partitions equal `cpus`. The driver heap is
+    `SPARK_GRAFT_DRIVER_MEM`, else half the host's memory (at most
+    24g): a heap past the host's size leaves garbage resident. At
+    cluster scale the same conf set applies minus `master`, with
+    shuffle partitions sized to ~2-3x total cores and
+    `spark.sql.files.maxPartitionBytes` left at 256m so a 100 TB scan
+    yields ~400k well-sized input splits.
     """
     cpus = cpus or os.environ.get(
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    shuffle = shuffle_partitions or int(os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
+    host_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{min(host_mb // 2, 24 * 1024)}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "256m")
         # Python worker spawn-and-connect-back accept timeout (default

@@ -140,7 +140,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str, tmp: str) -> DataFram
         .option("n_parts", 8)
         .load()
     )
-    table, _ = _run_to_table(
+    table = _run_to_table(
         stream, "append", checkpoint_location=f"{tmp}/ckpt"
     )
     return (

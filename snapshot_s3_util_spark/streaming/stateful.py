@@ -107,7 +107,7 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    table, _ = _run_to_table(profiled, "update")
+    table = _run_to_table(profiled, "update")
     # update mode may emit a row per micro-batch per key; keep the
     # final (max n_events) emission per user
     from pyspark.sql import Window
@@ -122,7 +122,6 @@ def stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sum_value", 4).alias("sum_value"),
             "last_ts",
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -329,7 +328,7 @@ def stream_tws_user_topk(spark: SparkSession, sf_dir: str, tmp: str) -> DataFram
                 outputMode="update",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
-        table, _ = _run_to_table(
+        table = _run_to_table(
             ranked, "update", checkpoint_location=f"{tmp}/ckpt"
         )
     finally:

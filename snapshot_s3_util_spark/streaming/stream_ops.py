@@ -6,6 +6,10 @@ DataFrame — the batch-equivalence discipline of SURVEY §5: a streaming
 query over a bounded file source must converge to the batch answer, so
 the DuckDB oracle checks the streaming result end-to-end.
 
+Result: `_run_to_table` drains the query, stops it and returns the
+memory sink's rows; the sink's temp view is dropped, and the rows,
+already in driver memory, are not checkpointed again.
+
 Sources: an op whose stream is `events` as stored streams the tier
 table where it lies (`io.load_table_stream`) — nothing is copied
 before the first micro-batch. Only ops whose stream differs from
@@ -42,7 +46,7 @@ _counter = itertools.count()
 
 def _run_to_table(
     stream_df: DataFrame, mode: str, checkpoint_location: str | None = None
-) -> tuple[DataFrame, str]:
+) -> DataFrame:
     name = f"s3u_stream_{next(_counter)}"
     writer = (
         stream_df.writeStream.outputMode(mode)
@@ -57,7 +61,12 @@ def _run_to_table(
     q.processAllAvailable()
     q.stop()
     spark = stream_df.sparkSession
-    return spark.table(name), name
+    # Classic PySpark resolves `spark.table` eagerly: the frame's plan
+    # holds the sink itself (a `MemoryPlan`), so it reads after the
+    # view is dropped.
+    table = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return table
 
 
 @register(
@@ -88,14 +97,11 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    table, _ = _run_to_table(agg, "complete")
-    return (
-        table.select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        ).localCheckpoint(eager=True)
+    return _run_to_table(agg, "complete").select(
+        F.col("w.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        "sum_value",
     )
 
 
@@ -133,14 +139,11 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    table, _ = _run_to_table(agg, "complete")
-    return (
-        table.select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        ).localCheckpoint(eager=True)
+    return _run_to_table(agg, "complete").select(
+        F.col("w.start").alias("window_start"),
+        "event_type",
+        "n_events",
+        "sum_value",
     )
 
 
@@ -187,15 +190,12 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    table, _ = _run_to_table(agg, "complete")
-    return (
-        table.select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        ).localCheckpoint(eager=True)
+    return _run_to_table(agg, "complete").select(
+        "user_id",
+        F.col("w.start").alias("session_start"),
+        F.col("w.end").alias("session_end"),
+        "n_events",
+        "sum_value",
     )
 
 
@@ -253,6 +253,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str, tmp: str) -> DataFra
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
+    # Not `_run_to_table`: the late rows must land while the query runs.
     name = f"s3u_stream_{next(_counter)}"
     q = (
         agg.writeStream.outputMode("append")
@@ -264,10 +265,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str, tmp: str) -> DataFra
     late.write.mode("append").parquet(src_dir)  # batch 2: late rows
     q.processAllAvailable()
     q.stop()
-    return (
-        spark.table(name)
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
+    table = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return table.select(F.col("w.start").alias("window_start"), "n_events")
 
 
 @register(
@@ -296,8 +296,7 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    table, _ = _run_to_table(agg, "complete")
-    return table.localCheckpoint(eager=True)
+    return _run_to_table(agg, "complete")
 
 
 @register(
@@ -335,8 +334,7 @@ def stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    table, _ = _run_to_table(agg, "complete")
-    return table.localCheckpoint(eager=True)
+    return _run_to_table(agg, "complete")
 
 
 @register(
@@ -398,8 +396,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lag_us"),
     )
-    table, _ = _run_to_table(joined, "append")
-    return table.localCheckpoint(eager=True)
+    return _run_to_table(joined, "append")
 
 
 # Micro-batches arriving in more partitions than this get a REBALANCE
@@ -531,7 +528,7 @@ def stream_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = stream.groupBy(
         F.window("ts", _TOPK_WIN).alias("w"), "user_id"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-    tbl, _ = _run_to_table(
+    tbl = _run_to_table(
         counts.select(
             F.col("w.start").alias("window_start"), "user_id", "n_events"
         ),
@@ -551,7 +548,6 @@ def stream_tumbling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
             "rnk",
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -816,7 +812,7 @@ def stream_left_outer_watermark(
     ).select(
         F.col("v_user").alias("user_id"), "view_id", "purchase_id"
     )
-    table, _ = _run_to_table(joined, "append")
+    table = _run_to_table(joined, "append")
     return (
         table.filter(F.col("user_id") >= 0)  # drop the sentinels
         .groupBy("user_id")

@@ -18,7 +18,7 @@ from tests.gauntlet_common import SF_DIR, duck_views  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark("tests", cpus=8, shuffle_partitions=8)
+    return get_spark("tests", cpus=8)
 
 
 @pytest.fixture(scope="session")

@@ -2,10 +2,11 @@
 
 Ops that write files and read them back stage them in a scratch dir
 that `on_scratch` creates, materializes the result against, and
-removes; a result built on the driver needs no materializing. These
-tests pin that lifecycle on toy ops, guard that no other package code
-makes or removes scratch dirs, and pin the session factory's CPU
-default.
+removes; a result computed only from rows on the driver (built there,
+or a finished memory sink's) needs no materializing. These tests pin
+that lifecycle on toy ops, guard that no other package code makes or
+removes scratch dirs, and pin the session factory's CPU and driver-heap
+defaults.
 """
 
 from __future__ import annotations
@@ -14,11 +15,13 @@ import ast
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 import snapshot_s3_util_spark
 from perfbench.sparkstats import StatusReader
 from snapshot_s3_util_spark import session
-from snapshot_s3_util_spark.io import on_scratch
+from snapshot_s3_util_spark.io import load_table, load_table_stream, on_scratch
+from snapshot_s3_util_spark.streaming.stream_ops import _run_to_table
 
 PKG = os.path.dirname(os.path.abspath(snapshot_s3_util_spark.__file__))
 
@@ -61,6 +64,54 @@ def test_on_scratch_returns_driver_rows_without_a_job(spark):
     df = toy(spark, "unused")
     assert stats.new_jobs() == []
     assert sorted(tuple(r) for r in df.collect()) == rows
+
+
+def test_on_scratch_returns_a_finished_sink_without_a_job(spark, sf_dir):
+    seen = {}
+
+    @on_scratch
+    def toy(spark, sf_dir, root):
+        sink = _run_to_table(load_table_stream(spark, sf_dir, "events"), "append")
+        seen["stats"] = StatusReader(spark)
+        return sink.groupBy("event_type").count()
+
+    df = toy(spark, sf_dir)
+    assert seen["stats"].new_jobs() == []
+    assert sum(r["count"] for r in df.collect()) == (
+        load_table(spark, sf_dir, "events").count()
+    )
+
+
+def _driver_rows_joined_to_a_scan(driver, scan):
+    return driver.join(scan, "id")
+
+
+def _driver_rows_under_a_scan_subquery(driver, scan):
+    return driver.filter(F.col("id") <= scan.agg(F.max("id")).scalar())
+
+
+@pytest.mark.parametrize(
+    "combine", [_driver_rows_joined_to_a_scan, _driver_rows_under_a_scan_subquery]
+)
+def test_on_scratch_checkpoints_driver_rows_mixed_with_a_scan(spark, combine):
+    seen = {}
+
+    @on_scratch
+    def toy(spark, sf_dir, root):
+        seen["root"] = root
+        out = os.path.join(root, "t")
+        spark.range(1, 3).write.parquet(out)
+        driver = spark.createDataFrame(
+            [(1, "a"), (2, "b"), (5, "c")], "id long, v string"
+        )
+        result = combine(driver, spark.read.parquet(out))
+        seen["stats"] = StatusReader(spark)
+        return result
+
+    df = toy(spark, "unused")
+    assert seen["stats"].new_jobs() != []
+    assert not os.path.exists(seen["root"])
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]
 
 
 def test_package_parallelizes_no_collection():
@@ -142,7 +193,10 @@ def test_checkpoints_spell_out_eagerness():
     assert not bare, "pass eager=True or eager=False: " + ", ".join(bare)
 
 
-def test_get_spark_defaults_to_the_cpus_this_process_may_use(monkeypatch):
+def _built_confs(monkeypatch) -> tuple[str, dict]:
+    """The master and confs `session.get_spark()` asks its builder for,
+    captured without starting a session."""
+
     class FakeBuilder:
         master_arg = None
         confs: dict = {}
@@ -167,11 +221,26 @@ def test_get_spark_defaults_to_the_cpus_this_process_may_use(monkeypatch):
     class FakeSession:
         builder = FakeBuilder()
 
-    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     monkeypatch.setattr(session, "SparkSession", FakeSession)
     with pytest.raises(_Built):
         session.get_spark()
+    return FakeBuilder.master_arg, FakeBuilder.confs
+
+
+def test_get_spark_defaults_to_the_cpus_this_process_may_use(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    master, confs = _built_confs(monkeypatch)
     n = len(os.sched_getaffinity(0))
-    assert FakeBuilder.master_arg == f"local[{n}]"
-    assert FakeBuilder.confs["spark.sql.shuffle.partitions"] == str(n)
+    assert master == f"local[{n}]"
+    assert confs["spark.sql.shuffle.partitions"] == str(n)
+
+
+def test_get_spark_sizes_the_driver_heap_to_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    _master, confs = _built_confs(monkeypatch)
+    host_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    assert confs["spark.driver.memory"] == f"{min(host_mb // 2, 24 * 1024)}m"
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "1g")
+    _master, confs = _built_confs(monkeypatch)
+    assert confs["spark.driver.memory"] == "1g"

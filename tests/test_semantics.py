@@ -3614,6 +3614,18 @@ def test_ignore_corrupt_recovers_exact_survivor_set(spark, sf_dir):
     assert sum(r["n_recovered"] for r in rows) < o.count()
 
 
+def test_ignore_corrupt_is_load_bearing(spark, sf_dir, tmp_path):
+    """On `scan_ignore_corrupt`'s layout a fail-fast read dies, so the
+    op's `ignoreCorruptFiles` is what lets it finish."""
+    from snapshot_s3_util_spark.operators.scans import write_corrupt_buckets
+
+    root = str(tmp_path / "buckets")
+    write_corrupt_buckets(spark, sf_dir, root)
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        spark.read.parquet(root).count()
+    assert spark.read.option("ignoreCorruptFiles", "true").parquet(root).count() > 0
+
+
 def test_left_outer_watermark_emits_unmatched_views(spark, sf_dir):
     rows = REGISTRY["stream_left_outer_watermark"].fn(spark, sf_dir).collect()
     total_views = (

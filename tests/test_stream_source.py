@@ -10,7 +10,6 @@ on the first read of a file version, reused without a job after that.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 
@@ -43,20 +42,13 @@ IN_PLACE_OPS = (
     "stream_state_inspect",
 )
 
-_query_ids = itertools.count()
-
-
 def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
 def _stream_rows(stream_df) -> list[tuple]:
     """Run a stream to completion into a memory table; return its rows."""
-    name = f"test_stream_source_{next(_query_ids)}"
-    q = stream_df.writeStream.format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    return _rows(stream_df.sparkSession.table(name))
+    return _rows(stream_ops._run_to_table(stream_df, "append"))
 
 
 def _listing(root: str) -> dict[str, tuple[int, int]]:
@@ -116,6 +108,19 @@ def test_stream_ops_write_nothing_into_the_tier(spark, sf_dir, tmp_path):
     for name in IN_PLACE_OPS:
         assert REGISTRY[name].fn(spark, tier).count() > 0, name
     assert _listing(tier) == before
+
+
+def test_streaming_ops_leave_no_sink_view_or_query(spark, sf_dir):
+    """A streaming op's memory sink ends with the op: once every
+    streaming op has run, its rows still read, and no `s3u_stream_*`
+    view and no active query is left."""
+    names = [op.name for op in REGISTRY.values() if op.category == "streaming"]
+    assert len(names) == 16
+    for name in names:
+        assert REGISTRY[name].fn(spark, sf_dir).collect(), name
+    views = [t.name for t in spark.catalog.listTables()]
+    assert [v for v in views if v.startswith("s3u_stream_")] == []
+    assert spark.streams.active == []
 
 
 def _write_events(src: str, out_dir: str, unit: str) -> None:
